@@ -581,18 +581,20 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     * leading underscore keeps parquet readers away), so the atomic
     * CHUNKS pointer flip publishes data and params together: a crash
     * mid-build can never leave a new generation served with the old
-    * dim (the silent-truncation garbage-ranking hazard). */
-  private def chunkParams: (Int, Int, Int) = {
-    val gen = currentChunkGen.getOrElse(throw new IllegalStateException(
-      s"no chunk index under $path — call buildChunkIndex() first"))
+    * dim (the silent-truncation garbage-ranking hazard). Returns
+    * `(window, stride, dim)` of chunk generation `gen`. */
+  private def chunkParamsAt(gen: Long): (Int, Int, Int) = {
     val p = Fs.readString(spark,
         s"${Snapshots.versionPath(path, "chunks", gen)}/_PARAMS").trim
       .split("\\s+").map(_.toInt)
     (p(0), p(1), p(2))
   }
 
-  private def currentChunkGen: Option[Long] =
-    Snapshots.current(spark, path, "CHUNKS")
+  /** One observation of the CHUNKS pointer: (base version, delta count). */
+  private def chunkPointer: (Long, Long) =
+    Snapshots.currentWithDeltas(spark, path, "CHUNKS")
+      .getOrElse(throw new IllegalStateException(
+        s"no chunk index under $path — call buildChunkIndex() first"))
 
   /** Build + persist the RAG chunk index from the current corpus
     * snapshot — the e04 pipeline (slide-chunk → feature-hash embed)
@@ -621,7 +623,7 @@ class CorpusStore private (val spark: SparkSession, val path: String,
       .getOrElse(throw new IllegalStateException(
         s"no documents under $path — load them first"))
     // data AND params land in the generation dir BEFORE the pointer
-    // flip (the chunkParams atomicity note) — so the persist is inlined
+    // flip (the chunkParamsAt atomicity note) — so the persist is inlined
     // rather than delegated to Snapshots.persist (which flips itself)
     val v = old.map(_._1 + 1).getOrElse(0L)
     val dir = Snapshots.versionPath(path, "chunks", v)
@@ -650,7 +652,7 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     * params. Every `compactEvery` refreshes the chain folds
     * ([[compactChunkIndex]]) so serving overlays stay bounded. */
   def refreshChunkIndex(): Unit = {
-    val (window, stride, dim) = chunkParams
+    val (window, stride, dim) = chunkParamsAt(chunkPointer._1)
     // a missing watermark (crash between the CHUNKS flip and the state
     // write, or a lost file) is the documented degrade-to-full-rebuild
     // case — not an error that leaves the tier unrefreshable
@@ -701,9 +703,9 @@ class CorpusStore private (val spark: SparkSession, val path: String,
   def compactChunkIndex(): Unit =
     Snapshots.currentWithDeltas(spark, path, "CHUNKS").foreach {
       case (v, k) if k > 0 =>
-        val (w, st, dm) = chunkParams
+        val (w, st, dm) = chunkParamsAt(v)
         val dir = Snapshots.versionPath(path, "chunks", v + 1)
-        chunkTable.write.mode("overwrite").parquet(dir)
+        chunkTableAt(v, k).write.mode("overwrite").parquet(dir)
         Fs.writeStringAtomic(spark, s"$dir/_PARAMS", s"$w $st $dm")
         Fs.writeStringAtomic(spark, s"$path/CHUNKS", (v + 1).toString)
         Snapshots.prune(spark, path, "chunks", v, k)
@@ -716,9 +718,13 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     * n_chunk_toks, chunk_text, vector). Overlay work is proportional to
     * delta rows — the base-sized side is one anti-join probe. */
   def chunkTable: DataFrame = {
-    val (v, k) = Snapshots.currentWithDeltas(spark, path, "CHUNKS")
-      .getOrElse(throw new IllegalStateException(
-        s"no chunk index under $path — call buildChunkIndex() first"))
+    val (v, k) = chunkPointer
+    chunkTableAt(v, k)
+  }
+
+  /** [[chunkTable]] of one pointer observation: base `v` overlaid by
+    * its first `k` deltas. */
+  private def chunkTableAt(v: Long, k: Long): DataFrame = {
     val base = spark.read.parquet(Snapshots.versionPath(path, "chunks", v))
     if (k == 0L) base
     else {
@@ -764,11 +770,13 @@ class CorpusStore private (val spark: SparkSession, val path: String,
     // consumers share the file scan with pushdown — eagerly
     // checkpointing it copied the whole chunk table into executor
     // storage per serve (r16: ~40 % of e06's steady-state wall)
-    val chainLen = Snapshots
-      .currentWithDeltas(spark, path, "CHUNKS").map(_._2).getOrElse(0L)
-    val raw = chunkTable
+    // ONE pointer observation builds the view AND picks the query dim:
+    // a refresh or compaction landing mid-call can't pair one
+    // generation's vectors with another's dim or checkpoint rule
+    val (v, chainLen) = chunkPointer
+    val raw = chunkTableAt(v, chainLen)
     val view = if (chainLen > 0) raw.localCheckpoint() else raw
-    val dim = chunkParams._3
+    val dim = chunkParamsAt(v)._3
     val qvec = TextFeaturizer.featureHash(queries, dim,
         idCol = "query_id", textCol = "text")
       .select(col("id").as("query_id"), col("vector").as("query_vec"))

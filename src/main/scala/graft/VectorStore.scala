@@ -1800,7 +1800,10 @@ class VectorStore private (
     * arm carries two structures PROPORTIONAL TO Q that no corpus-side
     * knob bounds: the per-(query, probed-cell) residual LUT
     * (`Q·nProbe·m·ksub·8 B` — 14 GiB at Q = 10 k × dim 384, the
-    * measured disk-exhaustion rung) and the exact-rerank re-attach
+    * measured disk-exhaustion rung of the old exploded formulation; the
+    * `pq_lut` kernel now builds it map-side with no shuffle of its own,
+    * but the flat arrays still ride the ADC join) and the exact-rerank
+    * re-attach
     * shuffle (`Q·shortlist·dim·4 B` — 77 GB at Q = 100 k × 384). This
     * entry resolves the SAME adaptive knobs [[searchPq]] would, sizes a
     * chunk so both structures fit the byte budgets, serves chunks

@@ -734,6 +734,189 @@ case class TopCellsExpr(children: Seq[Expression])
     copy(children = newChildren)
 }
 
+/** PQ lookup-table construction as ONE codegen'd loop — the LUT kernel of
+  * every ADC serving path ([[graft.operators.PqIndex]]). The former
+  * formulation exploded each (query[, probed cell]) row into m × ksub
+  * rows, joined the codebooks, and regrouped them through
+  * `array_sort(collect_list(struct(sub, code, d)))` — a generator, a
+  * shuffle of the long form and a sort-based collect per LUT. The
+  * codebooks are m × ksub × subLen floats (the same literal
+  * [[NearestCodeExpr]] ships for encode), so the LUT is computed on the
+  * vector's OWN row: one map-side expression, no joined rows.
+  *
+  * Children: (vec ARRAY<FLOAT>, books ARRAY<ARRAY<ARRAY<FLOAT>>>
+  * foldable, subLen INT foldable, metric STRING foldable). `books(s)`
+  * holds subspace s's centroids in code-ascending order; entry (s, c)
+  * scores vec's sub-slice `[s·subLen, (s+1)·subLen)` (clipped to the
+  * vector, as `slice` clips) against `books(s)(c)` over the shorter of
+  * the two lengths.
+  *
+  * BIT PARITY with the long form it replaces: the output is the
+  * concatenation of books(0), books(1), … in code order — exactly the
+  * (sub, code) order `array_sort` produced, ragged books included
+  * (a sub with fewer entries contributes fewer values, an empty one
+  * none). `euclidean` accumulates √Σ(qᵢ−cᵢ)² and `dot` Σ qᵢ·cᵢ in
+  * double, element order, as [[EuclideanDistanceExpr]]/[[DotProductExpr]]
+  * do, and every value passes the 8-dp LUT quantizer
+  * `(double)(long) floor(x·1e8 + 0.5) / 1e8` — Spark's
+  * `floor(x * 1e8 + 0.5).cast("double") / 1e8`, op for op. */
+case class PqLutExpr(children: Seq[Expression])
+    extends Expression with Serializable {
+  override def prettyName: String = "pq_lut"
+  override def dataType: DataType =
+    ArrayType(DoubleType, containsNull = false)
+  override def nullable: Boolean = children(0).nullable
+  override def foldable: Boolean = false
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    def fail(msg: String) =
+      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(msg)
+    val vecOk = children.nonEmpty && (children(0).dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    })
+    if (children.size != 4) fail(s"$prettyName expects 4 arguments")
+    else if (!vecOk) fail(s"$prettyName expects ARRAY<FLOAT> vec, got " +
+      children(0).dataType.simpleString)
+    else if (!children(1).foldable || !children(2).foldable ||
+        !children(3).foldable)
+      fail(s"$prettyName books/subLen/metric must be literals")
+    // SQL-registered: shape-check the literals too (the top_cells rule)
+    else (children(1).dataType, children(2).dataType,
+        children(3).dataType) match {
+      case (ArrayType(ArrayType(ArrayType(FloatType, _), _), _),
+          IntegerType, StringType) =>
+        (children(2).eval(), children(3).eval()) match {
+          case (s: java.lang.Integer, _) if s.intValue < 0 =>
+            fail(s"$prettyName subLen must be a non-negative INT literal, " +
+              s"got $s")
+          case (null, _) =>
+            fail(s"$prettyName subLen must be a non-negative INT literal, " +
+              "got NULL")
+          case (_, m: org.apache.spark.unsafe.types.UTF8String)
+              if m.toString == "euclidean" || m.toString == "dot" =>
+            org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+          case (_, m) => fail(s"$prettyName metric must be euclidean|dot, got $m")
+        }
+      case (b, s, m) => fail(s"$prettyName expects (vec ARRAY<FLOAT>, " +
+        s"books ARRAY<ARRAY<ARRAY<FLOAT>>>, subLen INT, metric STRING), " +
+        s"got books ${b.simpleString}, subLen ${s.simpleString}, " +
+        s"metric ${m.simpleString}")
+    }
+  }
+
+  @transient private lazy val books: Array[Array[Array[Float]]] = {
+    val a = children(1).eval().asInstanceOf[ArrayData]
+    Array.tabulate(a.numElements()) { s =>
+      val bk = a.getArray(s)
+      Array.tabulate(bk.numElements())(c => bk.getArray(c).toFloatArray())
+    }
+  }
+  @transient private lazy val subLen: Int = children(2).eval().asInstanceOf[Int]
+  @transient private lazy val dotMetric: Boolean =
+    children(3).eval().toString == "dot"
+  @transient private lazy val lutLen: Int = books.map(_.length).sum
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val v = children(0).eval(input)
+    if (v == null) null
+    else {
+      val vec = v.asInstanceOf[ArrayData]
+      val vn = vec.numElements()
+      val out = new Array[Double](lutLen)
+      var pos = 0
+      var s = 0
+      while (s < books.length) {
+        val off = s * subLen
+        val qn = if (off >= vn) 0 else math.min(subLen, vn - off)
+        val bk = books(s)
+        var c = 0
+        while (c < bk.length) {
+          val ct = bk(c)
+          val n = math.min(qn, ct.length)
+          var acc = 0.0; var i = 0
+          if (dotMetric) {
+            while (i < n) {
+              acc += vec.getFloat(off + i).toDouble * ct(i).toDouble; i += 1
+            }
+          } else {
+            while (i < n) {
+              val d = vec.getFloat(off + i).toDouble - ct(i).toDouble
+              acc += d * d; i += 1
+            }
+            acc = math.sqrt(acc)
+          }
+          out(pos) = math.floor(acc * 1.0e8 + 0.5).toLong.toDouble / 1.0e8
+          pos += 1; c += 1
+        }
+        s += 1
+      }
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(out)
+    }
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bRef = ctx.addReferenceObj("books", books, "float[][][]")
+    val vEv = children(0).genCode(ctx)
+    val out = ctx.freshName("out"); val pos = ctx.freshName("pos")
+    val vn = ctx.freshName("vn"); val s = ctx.freshName("s")
+    val off = ctx.freshName("off"); val qn = ctx.freshName("qn")
+    val bk = ctx.freshName("bk"); val c = ctx.freshName("c")
+    val ct = ctx.freshName("ct"); val n = ctx.freshName("n")
+    val acc = ctx.freshName("acc"); val i = ctx.freshName("i")
+    val d = ctx.freshName("d")
+    val kernel =
+      if (dotMetric)
+        s"""
+           |for (int $i = 0; $i < $n; $i++) {
+           |  $acc += ((double) ${vEv.value}.getFloat($off + $i))
+           |    * ((double) $ct[$i]);
+           |}
+         """.stripMargin
+      else
+        s"""
+           |for (int $i = 0; $i < $n; $i++) {
+           |  double $d = ((double) ${vEv.value}.getFloat($off + $i))
+           |    - ((double) $ct[$i]);
+           |  $acc += $d * $d;
+           |}
+           |$acc = java.lang.Math.sqrt($acc);
+         """.stripMargin
+    val code =
+      s"""
+         |${vEv.code}
+         |boolean ${ev.isNull} = ${vEv.isNull};
+         |org.apache.spark.sql.catalyst.util.ArrayData ${ev.value} = null;
+         |if (!${ev.isNull}) {
+         |  double[] $out = new double[$lutLen];
+         |  int $pos = 0;
+         |  int $vn = ${vEv.value}.numElements();
+         |  for (int $s = 0; $s < $bRef.length; $s++) {
+         |    int $off = $s * $subLen;
+         |    int $qn = ($off >= $vn) ? 0 : java.lang.Math.min($subLen, $vn - $off);
+         |    float[][] $bk = $bRef[$s];
+         |    for (int $c = 0; $c < $bk.length; $c++) {
+         |      float[] $ct = $bk[$c];
+         |      int $n = java.lang.Math.min($qn, $ct.length);
+         |      double $acc = 0.0;
+         |      $kernel
+         |      $out[$pos++] =
+         |        ((double) (long) java.lang.Math.floor($acc * 1.0E8 + 0.5)) / 1.0E8;
+         |    }
+         |  }
+         |  ${ev.value} = org.apache.spark.sql.catalyst.util.ArrayData
+         |    .toArrayData($out);
+         |}
+       """.stripMargin
+    ev.copy(code = org.apache.spark.sql.catalyst.expressions.codegen.Block
+      .BlockHelper(new StringContext(code)).code())
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): Expression =
+    copy(children = newChildren)
+}
+
 /** Dense matrix × vector as ONE codegen'd double loop — the rotation /
   * projection kernel ([[graft.operators.OpqRotation.rotate]]). The
   * `array(dotProduct(vec, row_0), …, dotProduct(vec, row_{d-1}))`
@@ -823,6 +1006,7 @@ object VectorFunctions {
     "hamming64" -> (es => HammingExpr(es(0), es(1))),
     "nearest_code" -> (es => NearestCodeExpr(es)),
     "top_cells" -> (es => TopCellsExpr(es)),
+    "pq_lut" -> (es => PqLutExpr(es)),
     "mat_vec" -> (es => MatVecExpr(es(0), es(1))),
     "mmr_select" -> (es => MmrSelectExpr(es)),
     "barrier" -> (es => BarrierExpr(es(0))),
@@ -877,6 +1061,17 @@ object VectorFunctions {
     call_function("nearest_code", book, vec,
       org.apache.spark.sql.functions.typedlit(books),
       org.apache.spark.sql.functions.typedlit(ids), lit(metric))
+
+  /** Flat PQ lookup table of `vec` against the codebooks
+    * ([[PqLutExpr]]): entry (sub, code) = the 8-dp-quantized `metric`
+    * (`euclidean` distance or `dot` product) of vec's sub-slice and
+    * `books(sub)(code)`, laid out in (sub, code) order — the ADC LUT
+    * built on the vector's own row. */
+  def pqLut(vec: Column, books: Seq[Seq[Seq[Float]]], subLen: Int,
+      metric: String): Column =
+    call_function("pq_lut", vec,
+      org.apache.spark.sql.functions.typedlit(books), lit(subLen),
+      lit(metric))
 
   /** Dense matrix × vector ([[MatVecExpr]]): out[p] = Σᵢ vec[i]·m[p][i],
     * double accumulation in i-order, each output cast to float — the

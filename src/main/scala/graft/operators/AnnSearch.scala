@@ -656,6 +656,14 @@ object AnnSearch {
       }
       var cur = frontier
       for (it <- 1 to iters) {
+        val lastHop = level == 0 && it == iters
+        // checkpoint before the LAST hop when anything is pending (the
+        // [[expandAndRank]] rule): the last hop's (union ∪ expand)
+        // references its input twice, so a pending hop below it would
+        // execute twice inside the final action
+        if (lastHop && hopsSinceCp > 0) {
+          cur = cur.localCheckpoint(); hopsSinceCp = 0
+        }
         val csrc = if (frontierFits) broadcast(cur) else cur
         val cand = csrc
           .join(e, csrc("id") === e("src"))
@@ -668,7 +676,6 @@ object AnnSearch {
           .select(col("query_id"), col("id"), col("score"))
         cur = dedupTopEf(cur.unionByName(expanded), levelEf)
         hopsSinceCp += 1
-        val lastHop = level == 0 && it == iters
         if (hopsSinceCp >= 2 && !lastHop) {
           cur = cur.localCheckpoint(); hopsSinceCp = 0
         }

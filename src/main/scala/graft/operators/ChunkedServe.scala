@@ -15,7 +15,14 @@ import org.apache.spark.storage.StorageLevel
   *     `Q × nProbe × m × ksub × 8 B` (98 KB per (query, cell) at
   *     dim 384): Q = 10 k at 384 built ~14 GiB of LUT and exhausted a
   *     56 GB disk through 4–5× sort/shuffle spill amplification;
-  *     Q = 100 k (~128 GiB) spill-OOM'd outright;
+  *     Q = 100 k (~128 GiB) spill-OOM'd outright. Those walls were
+  *     measured with the exploded long-form LUT (m × ksub rows
+  *     per LUT, regrouped through a shuffle and a sort). The LUT is now
+  *     one map-side `pq_lut` expression per (query, cell) row
+  *     ([[graft.functions.PqLutExpr]]), so that amplification is gone,
+  *     but the flat LUT arrays themselves still ride the
+  *     (query, cell) join into the ADC scan — broadcast, or shuffled
+  *     past the gate — so their bytes still bound a chunk;
   *  2. the exact-rerank re-attach tail every compressed arm shares —
   *     `Q × shortlist × dim × 4 B` of raw vectors through one shuffle
   *     (77 GB at Q = 100 k × shortlist 500 × dim 384): the wall the
@@ -40,9 +47,10 @@ import org.apache.spark.storage.StorageLevel
 object ChunkedServe {
 
   /** Per-chunk byte budget for the euclidean arm's per-(query, cell)
-    * residual LUT. 2 GiB keeps the dominant chunk structure around the
-    * measured-safe regime (~2 k queries at dim 384 with the flagship
-    * knobs — the SCALING.md guidance this operator encodes). */
+    * residual LUT — the flat `pq_lut` arrays the ADC join carries.
+    * 2 GiB keeps the dominant chunk structure around the measured-safe
+    * regime (~2 k queries at dim 384 with the flagship knobs — the
+    * SCALING.md guidance this operator encodes). */
   val DefaultLutBudgetBytes: Long = 2L << 30
 
   /** Per-chunk byte budget for the exact-rerank re-attach shuffle

@@ -22,7 +22,10 @@ import graft.functions.VectorFunctions
   *    map-side argmin, partial-agg collapse back to one codes-array row
   *    per vector).
   *  - ADC: per-query LUTs (m × ksub distances each, flattened to one
-  *    array) BROADCAST against the packed codes table — n × Q rows, the
+  *    array) are computed on the query's own row by the
+  *    [[graft.functions.PqLutExpr]] kernel (codebooks as a literal — no
+  *    exploded rows, no regroup shuffle; [[lutTable]]) and BROADCAST
+  *    against the packed codes table — n × Q rows, the
   *    same row count as exact kNN, but each row is a codegen'd m-lookup
   *    sum ([[graft.functions.PqAdcExpr]]) instead of a dim-length float
   *    kernel, and the scanned side carries 8-byte codes instead of
@@ -69,7 +72,9 @@ object PqIndex {
   /** 8-dp LUT quantization via `floor(x·1e8 + 0.5)/1e8` — pure IEEE ops
     * both engines evaluate identically. `round(double, n)` is NOT
     * cross-engine portable at boundary values (the Retrieval.scala
-    * determinism note), so it appears nowhere in a hash-checked path. */
+    * determinism note), so it appears nowhere in a hash-checked path.
+    * [[graft.functions.PqLutExpr]] applies the same ops to every LUT
+    * entry. */
   private def q8(c: Column): Column =
     floor(c * lit(100000000.0) + lit(0.5)).cast("double") /
       lit(100000000.0)
@@ -117,20 +122,49 @@ object PqIndex {
     * bounded collect — m × ksub rows, the codebook itself. */
   private def collectBooks(codebooks: DataFrame)
       : (Seq[Seq[Seq[Float]]], Seq[Seq[Int]]) = {
-    val rows = codebooks.select(col("sub"), col("code"), col("centroid"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
+    val rows = bookEntries(codebooks)
     // corrupt-input guard: the broadcast-join formulation this kernel
     // replaced surfaced an empty codebook as an explicit geometry error
     // downstream; a bare `empty.max` UnsupportedOperationException hides
     // the actual problem
     require(rows.nonEmpty, "empty PQ codebook table")
-    val m = rows.map(_._1).max + 1
+    booksOf(rows, rows.map(_._1).max + 1)
+  }
+
+  /** The codebook table's (sub, code, centroid) rows, collected. */
+  private def bookEntries(codebooks: DataFrame)
+      : Array[(Int, Int, Seq[Float])] =
+    codebooks.select(col("sub"), col("code"), col("centroid"))
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2)))
+
+  /** Subspaces 0 until m as (centroids, codes), each in code order. */
+  private def booksOf(rows: Array[(Int, Int, Seq[Float])], m: Int)
+      : (Seq[Seq[Seq[Float]]], Seq[Seq[Int]]) = {
     val bySub = rows.groupBy(_._1)
     val empty = Array.empty[(Int, Int, Seq[Float])]
     (Seq.tabulate(m)(s =>
         bySub.getOrElse(s, empty).sortBy(_._2).map(_._3.toSeq).toSeq),
       Seq.tabulate(m)(s =>
         bySub.getOrElse(s, empty).sortBy(_._2).map(_._2).toSeq))
+  }
+
+  /** (keys…, lut) — THE ADC lookup tables every PQ serving path
+    * shares: one [[graft.functions.PqLutExpr]] evaluation on each input
+    * row, the codebooks shipped as a literal (one bounded collect of
+    * m × ksub rows, the [[encode]] rule). Entry (sub, code) is the
+    * 8-dp-quantized `metric` — `euclidean` distance or `dot` product —
+    * of `vec`'s sub-slice and that centroid, in (sub, code) order: the
+    * flat layout [[graft.functions.PqAdcExpr]] reads. Codebook entries
+    * outside subspaces [0, m) never enter a LUT, and a codebook with
+    * none inside yields no LUT rows. A map-side projection of `rows`:
+    * no generator, no join, no shuffle. */
+  private def lutTable(rows: DataFrame, keys: Seq[String], vec: Column,
+      codebooks: DataFrame, m: Int, subLen: Int, metric: String)
+      : DataFrame = {
+    val entries = bookEntries(codebooks).filter(e => e._1 >= 0 && e._1 < m)
+    val lut = rows.select(keys.map(col) :+ VectorFunctions.pqLut(vec,
+      booksOf(entries, m)._1, subLen, metric).as("lut"): _*)
+    if (entries.isEmpty) lut.where(lit(false)) else lut
   }
 
   /** Per-subspace Lloyd refinement of `init`: assign = codegen'd argmin
@@ -302,20 +336,8 @@ object PqIndex {
       broadcastBytes: Long = 64L << 20,
       idFilter: Option[DataFrame] = None): DataFrame = {
     val scanCodes = KnnSearch.restrictIds(codes, idFilter)
-    val lutLong = queries
-      .select(col("query_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("query_vec"))
-      .select(col("query_id"), col("sub"),
-        slice(col("query_vec"), col("sub") * subLen + 1, lit(subLen))
-          .as("qsub"))
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        q8(VectorFunctions.euclideanDist(col("qsub"), col("centroid")))
-          .as("d"))
-    val lut = lutLong.groupBy(col("query_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("code"), col("d")))),
-        e => e.getField("d")).as("lut"))
+    val lut = lutTable(queries, Seq("query_id"), col("query_vec"),
+      codebooks, m, subLen, "euclidean")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("id").asc)
     val lutSmall =
@@ -360,20 +382,8 @@ object PqIndex {
     val cand = fasg
       .join(maybeBroadcast(probed, broadcastBytes), Seq("cell"))
       .select(col("query_id"), col("id"))
-    val lutLong = queries
-      .select(col("query_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("query_vec"))
-      .select(col("query_id"), col("sub"),
-        slice(col("query_vec"), col("sub") * subLen + 1, lit(subLen))
-          .as("qsub"))
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        q8(VectorFunctions.euclideanDist(col("qsub"), col("centroid")))
-          .as("d"))
-    val lut = lutLong.groupBy(col("query_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("code"), col("d")))),
-        e => e.getField("d")).as("lut"))
+    val lut = lutTable(queries, Seq("query_id"), col("query_vec"),
+      codebooks, m, subLen, "euclidean")
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("adc").asc, col("id").asc)
     packedOf(codes).join(maybeBroadcast(cand, broadcastBytes), Seq("id"))
@@ -456,19 +466,8 @@ object PqIndex {
       .select(col("query_id"), col("cell"),
         zip_with(col("query_vec"), col("centroid"), (x, y) => x - y)
           .as("qr"))
-    val lutLong = qres
-      .select(col("query_id"), col("cell"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("qr"))
-      .select(col("query_id"), col("cell"), col("sub"),
-        slice(col("qr"), col("sub") * subLen + 1, lit(subLen)).as("qsub"))
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col("query_id"), col("cell"), col("sub"), col("code"),
-        q8(VectorFunctions.euclideanDist(col("qsub"), col("centroid")))
-          .as("d"))
-    val lut = lutLong.groupBy(col("query_id"), col("cell"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("code"), col("d")))),
-        e => e.getField("d")).as("lut"))
+    val lut = lutTable(qres, Seq("query_id", "cell"), col("qr"), codebooks,
+      m, subLen, "euclidean")
     val cand = fasg
       .join(maybeBroadcast(probed, broadcastBytes), Seq("cell"))
       .select(col("query_id"), col("cell"), col("id"))
@@ -536,20 +535,8 @@ object PqIndex {
           .as("qc"))
     // the per-QUERY inner-product LUT: raw query slices × residual
     // codewords — cell-independent, so Q × m·ksub total
-    val lutLong = queries
-      .select(col("query_id"),
-        explode(sequence(lit(0), lit(m - 1))).as("sub"), col("query_vec"))
-      .select(col("query_id"), col("sub"),
-        slice(col("query_vec"), col("sub") * subLen + 1, lit(subLen))
-          .as("qsub"))
-      .join(broadcast(codebooks), Seq("sub"))
-      .select(col("query_id"), col("sub"), col("code"),
-        q8(VectorFunctions.dotProduct(col("qsub"), col("centroid")))
-          .as("d"))
-    val lut = lutLong.groupBy(col("query_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("sub"), col("code"), col("d")))),
-        e => e.getField("d")).as("lut"))
+    val lut = lutTable(queries, Seq("query_id"), col("query_vec"),
+      codebooks, m, subLen, "dot")
     val cand = fasg
       .join(maybeBroadcast(probed, broadcastBytes), Seq("cell"))
       .select(col("query_id"), col("cell"), col("id"))

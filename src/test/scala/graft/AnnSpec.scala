@@ -271,6 +271,21 @@ class AnnSpec extends SparkSpec {
     assert(bad === 0)
   }
 
+  test("graph search checkpoints before the last hop: the final action " +
+      "holds exactly one hop subplan") {
+    val (nodes, edges) = IndexBuild.build(nodesDf, params)
+    val out = AnnSearch.searchGraph(nodes, edges, queriesDf, k = 10,
+      minSim = -2.0, params, ef = 32, itersPerLevel = 2)
+    // each hop's dedup repartitions by query_id; a pending hop under the
+    // last one would appear twice more (its union and expand branches)
+    val hops = out.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical
+          .RepartitionByExpression => r
+    }
+    assert(hops.size === 1, out.queryExecution.optimizedPlan)
+    assert(out.count() > 0)
+  }
+
   test("graph search recall@10 beats 0.4 and excludes tombstones") {
     val (nodes, edges) = IndexBuild.build(nodesDf, params)
     val r = recallAt(10, AnnSearch.searchGraph(nodes, edges, queriesDf,

@@ -302,6 +302,38 @@ class CorpusStoreSpec extends SparkSpec {
     store.delete()
   }
 
+  test("searchChunks reads the CHUNKS pointer once: the served view, its " +
+      "checkpoint rule and the query dim come from one observation") {
+    val store = CorpusStore.openOrCreate(spark,
+      graft.util.Fs.tempDirDeletedOnExit("graft-corpus-store-spec"),
+      compactEvery = 100)
+    store.putDocuments(docs.select(col("doc_id"), col("text")).limit(20))
+    store.buildChunkIndex(window = 32, stride = 16, dim = 16)
+    store.appendDocuments(Seq((3L, "fresh words for doc three")).toDF(
+      "doc_id", "text"))
+    store.refreshChunkIndex() // a one-delta chain: the checkpointed view
+    // the replaced doc's own text: its refreshed chunk scores cosine 1
+    val probe = Seq((1L, "fresh words for doc three")).toDF("query_id",
+      "text")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val keys = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+    val saved = keys.map(k => k -> Option(conf.get(k)))
+    PointerCountingFs.opens.set(0)
+    val hits =
+      try {
+        conf.set("fs.file.impl", classOf[PointerCountingFs].getName)
+        conf.setBoolean("fs.file.impl.disable.cache", true)
+        store.searchChunks(probe, k = 3)
+      } finally saved.foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    assert(PointerCountingFs.opens.get === 1)
+    assert(hits.filter(col("rn") === 1).select("doc_id").as[Long].head()
+      === 3L)
+    store.delete()
+  }
+
   test("refreshChunkIndex retires chunks of a doc replaced with " +
       "token-less text (the tombstone path)") {
     val store = CorpusStore.openOrCreate(spark,
@@ -587,4 +619,17 @@ class CorpusStoreSpec extends SparkSpec {
     assert(nBase > 0)
     store.delete()
   }
+}
+
+/** Local filesystem that counts reads of `CHUNKS` snapshot pointers. */
+class PointerCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    if (f.getName == "CHUNKS") PointerCountingFs.opens.incrementAndGet()
+    super.open(f, bufferSize)
+  }
+}
+
+object PointerCountingFs {
+  val opens = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -85,6 +85,9 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), p)
     assert(p.linesIterator.exists(l =>
       l.contains("pq_adc") && l.contains("*(")), p)
+    // the per-query LUT is a pq_lut projection inside codegen as well
+    assert(p.linesIterator.exists(l =>
+      l.contains("pq_lut") && l.contains("*(")), p)
   }
 
   test("t09: BM25 candidates come from the term equi-join, never corpus x queries") {
@@ -146,5 +149,44 @@ class PlanSpec extends SparkSpec {
       df.queryExecution.executedPlan)
     assert(codegen.contains("Found"), codegen.take(200))
     assert(!codegen.contains("Redefinition"), "codegen local name collision")
+  }
+
+  test("residual IVF-PQ: the LUT is one map-side pq_lut projection — no " +
+      "Generate or aggregate builds it, and the ADC rank's exchange is " +
+      "the only shuffle") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{IvfIndex, PqIndex}
+    // every input as a local relation, so the plan holds only the
+    // search's own operators (packed codes: no per-call pack aggregate)
+    def local(df: DataFrame): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*),
+        df.schema)
+    val emb = Tables.embeddings(spark, sf001)
+    val nodes = VectorQueries.asVectorTable(emb)
+    val coarse = local(IvfIndex.sampleCodebook(nodes, k = 10))
+    val asg = local(IvfIndex.assign(nodes, coarse)
+      .select(col("id"), col("cell")))
+    val res = PqIndex.residuals(nodes, asg, coarse)
+      .select(col("id"), col("vector"))
+    val rcb = local(PqIndex.sampleCodebooks(res, 8, 8, 16))
+    val packed = local(PqIndex.packCodes(PqIndex.encode(res, rcb, 8, 8)))
+    val out = PqIndex.searchIvfPqResidual(packed, asg, coarse, rcb,
+      local(VectorQueries.querySet(emb)), k = 10, nProbe = 3, m = 8,
+      subLen = 8)
+    val opt = out.queryExecution.optimizedPlan
+    // the only generator left is the probe list's explode of top_cells
+    val gens = opt.collect { case g: Generate => g.generator.toString }
+    assert(gens.nonEmpty && gens.forall(_.contains("top_cells")), opt)
+    assert(opt.collect { case a: Aggregate => a }.isEmpty, opt)
+    out.collect()
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collect(out.queryExecution.executedPlan) {
+        case e: ShuffleExchangeExec => e
+      }
+    assert(shuffles.size === 1, out.queryExecution.executedPlan)
   }
 }
