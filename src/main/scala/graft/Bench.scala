@@ -41,17 +41,58 @@ object Bench {
       spark.range(1000000L).selectExpr("sum(id)").collect()
       SparkEntry.entry(spark).count()
     } catch { case _: Throwable => () }
-    // Two timed passes, report the per-query MIN: a single-run number can't
-    // distinguish a regression from JVM/GC noise in a ~80-query session.
-    def timedPass(): Map[String, Double] = SparkEntry.queries.map {
-      case (name, fn) =>
+    val passes = timedPasses(SparkEntry.queries.map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () })
+    }.toSeq)
+    val (line, record, headline) = render(passes, sfDir)
+    println(line)
+    // Machine-diffable per-query record (the driver's tail capture can
+    // truncate the line above): overwritten every run; snapshot per round
+    // under bench_history/ to track regressions across rounds.
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("BENCH_LAST_QUERIES.json"), record)
+    catch { case _: Throwable => () }
+    // The per-query line above can exceed a tail-capture window (the
+    // driver keeps the END of stdout), so repeat the headline LAST as a
+    // short self-contained record — whatever window survives contains it.
+    println(headline)
+    spark.stop()
+  }
+
+  /** Pass-1 seconds and the two-pass MIN per query, over the queries
+    * that ran; `failed` names every query that threw in either pass. */
+  private[graft] final case class Passes(first: Map[String, Double],
+      min: Map[String, Double], failed: Seq[String])
+
+  /** Two timed passes, reporting the per-query MIN: a single-run number
+    * can't distinguish a regression from JVM/GC noise in a ~80-query
+    * session. A query that throws is recorded under `failed`, never
+    * timed: its elapsed seconds would read as a fast query. */
+  private[graft] def timedPasses(queries: Seq[(String, () => Unit)])
+      : Passes = {
+    def pass(): Seq[(String, Option[Double])] = queries.map {
+      case (name, run) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        val ok = try { run(); true } catch { case _: Throwable => false }
+        name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
     }
-    val first = timedPass()
-    val second = timedPass()
-    val results = first.map { case (k, v) => k -> math.min(v, second(k)) }
+    val p1 = pass()
+    val p2 = pass().toMap
+    val failed = p1.collect {
+      case (name, t) if t.isEmpty || p2(name).isEmpty => name
+    }
+    val first = p1.collect {
+      case (name, Some(t)) if !failed.contains(name) => name -> t
+    }.toMap
+    Passes(first, first.map { case (k, v) => k -> math.min(v, p2(k).get) },
+      failed)
+  }
+
+  /** (the per-query JSON line, the `BENCH_LAST_QUERIES.json` record, the
+    * short headline line) of one bench run. */
+  private[graft] def render(p: Passes, sfDir: String)
+      : (String, String, String) = {
+    val results = p.min
     def jmap(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = jmap(results)
@@ -63,32 +104,23 @@ object Bench {
     // existing key, so the driver's parser and every cross-round
     // comparison stay valid; a build-cost regression is now auditable as
     // first[q] − queries[q].
-    val firstQs = jmap(first)
+    val firstQs = jmap(p.first)
+    val failed = p.failed.map(n => "\"" + n + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val firstTotal = if (first.nonEmpty) first.values.sum else 0.0
+    val firstTotal = if (p.first.nonEmpty) p.first.values.sum else 0.0
     // regime-drift guards: the per-query p50/p95 make a creeping tail of
     // multi-second by-design rows visible before the 2×-of-baseline
     // ceiling binds (nearest-rank percentiles over the per-query MINs)
-    def pct(p: Double): Double =
+    def pct(q: Double): Double =
       if (results.isEmpty) 0.0
       else {
         val sorted = results.values.toIndexedSeq.sorted
         sorted(math.min(sorted.length - 1,
-          math.ceil(p * sorted.length).toInt - 1).max(0))
+          math.ceil(q * sorted.length).toInt - 1).max(0))
       }
     val (p50, p95) = (pct(0.50), pct(0.95))
-    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"sf":"$sfDir"}""")
-    // Machine-diffable per-query record (the driver's tail capture can
-    // truncate the line above): overwritten every run; snapshot per round
-    // under bench_history/ to track regressions across rounds.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LAST_QUERIES.json"),
-      s"""{"sf":"$sfDir","total":$total,"p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs}""")
-    catch { case _: Throwable => () }
-    // The per-query line above can exceed a tail-capture window (the
-    // driver keeps the END of stdout), so repeat the headline LAST as a
-    // short self-contained record — whatever window survives contains it.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"n_queries":${results.size},"sf":"$sfDir"}""")
-    spark.stop()
+    (s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"failed":$failed,"sf":"$sfDir"}""",
+      s"""{"sf":"$sfDir","total":$total,"p50":$p50,"p95":$p95,"first_total":$firstTotal,"queries":$qs,"first":$firstQs,"failed":$failed}""",
+      s"""{"metric":"total","value":$total,"unit":"sec","p50":$p50,"p95":$p95,"first_total":$firstTotal,"n_queries":${results.size},"sf":"$sfDir"}""")
   }
 }

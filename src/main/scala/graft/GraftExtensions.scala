@@ -6,7 +6,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions._
 
 /** Session-extension entry point: registers every graft SQL function
-  * (similarity kernels + topk_ids) at session build time, so a cluster
+  * (the [[VectorFunctions]] table, `topk_ids` and `bloom_might_contain`)
+  * at session build time, so a cluster
   * deployment gets them in plain `spark.sql` with
   *
   * {{{
@@ -23,29 +24,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "built-in")
 
-  /** (name, usage, builder) for every injected function. */
-  def functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-    ("dot_product", "dot_product(a, b) - float-array dot product",
-      es => DotProductExpr(es(0), es(1))),
-    ("cosine_sim", "cosine_sim(a, b) - cosine similarity",
-      es => CosineSimilarityExpr(es(0), es(1))),
-    ("euclidean_dist", "euclidean_dist(a, b) - euclidean distance",
-      es => EuclideanDistanceExpr(es(0), es(1))),
-    ("pq_adc", "pq_adc(codes, lut) - PQ asymmetric-distance lookup sum",
-      es => PqAdcExpr(es(0), es(1))),
-    ("sq_l2", "sq_l2(a, b) - symmetric SQ squared-L2 over int code arrays",
-      es => SqL2Expr(es(0), es(1))),
-    ("hamming64", "hamming64(a, b) - Hamming distance over packed " +
-      "sign-bit word arrays",
-      es => HammingExpr(es(0), es(1))),
-    ("topk_ids", "topk_ids(id, score, k) - top-k ids by score per group",
-      es => TopKIds(es(0), es(1), es(2)).toAggregateExpression()),
-    ("bloom_might_contain",
-      "bloom_might_contain(filter, key) - membership test against a " +
-        "serialized bloom filter (no false negatives)",
-      es => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(es(0), es(1))),
-  )
+  /** (name, usage, builder) for every injected function: the
+    * [[VectorFunctions]] table that `VectorFunctions.register` reads,
+    * plus the two functions registered elsewhere. */
+  def functions: Seq[(String, String, Seq[Expression] => Expression)] =
+    VectorFunctions.builders ++ Seq(
+      ("topk_ids", "topk_ids(id, score, k) - top-k ids by score per group",
+        (es: Seq[Expression]) =>
+          TopKIds(es(0), es(1), es(2)).toAggregateExpression()),
+      ("bloom_might_contain",
+        "bloom_might_contain(filter, key) - membership test against a " +
+          "serialized bloom filter (no false negatives)",
+        (es: Seq[Expression]) => org.apache.spark.sql.catalyst.expressions
+          .BloomFilterMightContain(es(0), es(1))),
+    )
 
   override def apply(ext: SparkSessionExtensions): Unit =
     functions.foreach { case (name, usage, builder) =>

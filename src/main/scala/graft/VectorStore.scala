@@ -754,10 +754,32 @@ class VectorStore private (
     * projections per batch. Generations/deltas written before the chain
     * existed fall back to that recomputation (the pre-chain behavior);
     * the next compaction writes the table and upgrades the store. */
-  private val overlayMemo = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame, DataFrame, IndexParams)]
-  private def loadIndexOverlayFull()
-      : (DataFrame, DataFrame, DataFrame, IndexParams) = {
+  private val overlayMemo =
+    scala.collection.concurrent.TrieMap.empty[String, ServedIndex]
+
+  /** One INDEX pointer stamp's served graph, with the walk's broadcast
+    * [[operators.GraphSnapshot]] built at the stamp's first graph search
+    * (never in [[rebuild]] or a merge, which do not walk) from the same
+    * overlay relations, and destroyed when the stamp is evicted. */
+  private final class ServedIndex(val nodes: DataFrame, val edges: DataFrame,
+      val memb: DataFrame, val params: IndexParams) {
+    private var snap: Option[Option[GraphSnapshot]] = None
+    def snapshot: GraphSnapshot.Known = GraphSnapshot.Held(synchronized {
+      snap.getOrElse {
+        val s = GraphSnapshot.fitting(nodes, edges, params.dim,
+          AnnSearch.DefaultBroadcastBytes)
+        snap = Some(s)
+        s
+      }
+    })
+    def release(): Unit = synchronized {
+      snap.foreach(_.foreach(_.destroy())); snap = None
+    }
+  }
+
+  /** The served graph overlay plus its walk snapshot, all of one INDEX
+    * pointer stamp. */
+  private def servedGraph(): ServedIndex = {
     // memoized per INDEX pointer stamp (the countMemo rule): the
     // chain-presence overlay pays ~3 eager localCheckpoint jobs per
     // LOAD (delta-sized relations that serving re-executes ~4×/call if
@@ -766,11 +788,21 @@ class VectorStore private (
     // fixed per-serve overlay cost disappears after the first call. Any
     // mutation flips the pointer → new stamp → fresh overlay; stale
     // stamps evict (their checkpointed blocks unpersist with GC, their
-    // base-side scans point at dirs the prune may reclaim post-grace).
+    // base-side scans point at dirs the prune may reclaim post-grace;
+    // their snapshot broadcast is destroyed now).
     val stamp = pointerStamp("INDEX")
     overlayMemo.keys.foreach { s =>
-      if (s != stamp) { overlayMemo.remove(s); () } }
-    overlayMemo.getOrElseUpdate(stamp, computeIndexOverlayFull())
+      if (s != stamp) overlayMemo.remove(s).foreach(_.release()) }
+    overlayMemo.getOrElseUpdate(stamp, {
+      val (n, e, m, p) = computeIndexOverlayFull()
+      new ServedIndex(n, e, m, p)
+    })
+  }
+
+  private def loadIndexOverlayFull()
+      : (DataFrame, DataFrame, DataFrame, IndexParams) = {
+    val g = servedGraph()
+    (g.nodes, g.edges, g.memb, g.params)
   }
 
   private def computeIndexOverlayFull()
@@ -1064,7 +1096,8 @@ class VectorStore private (
       predicate: Option[Column] = None,
       seedProjDim: Int = 0): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
-    val (n, e, p) = loadIndexOverlay()
+    val g = servedGraph()
+    val (n, e, p) = (g.nodes, g.edges, g.params)
     // the filtered-walk contract puts the recall on the SEED probe —
     // escalate it exactly like [[searchAnn]] (base 3, probe-all at 10×)
     val pb = predicate match {
@@ -1088,7 +1121,7 @@ class VectorStore private (
       // wins only when the corpus has low effective dimension
       // (SCALING.md r14 lowdim rows) — a property of the data the
       // facade can't assume
-      seedProjDim = seedProjDim)
+      seedProjDim = seedProjDim, snapshot = g.snapshot)
   }
 
   /** The hot-bucket seeded tier: graph expansions seeded from the
@@ -1106,14 +1139,14 @@ class VectorStore private (
       strengthSetting: Double = 50, ef: Int = 64, iters: Int = 2,
       nProbe: Int = 32, predicate: Option[Column] = None): DataFrame = {
     graft.functions.VectorFunctions.register(spark)
-    val (n, e, p) = loadIndexOverlay()
+    val g = servedGraph()
     val pre = loadPqIndex()
-    AnnSearch.searchGraphSeededIvf(n, e, queries, k,
-      KnnSearch.scaleThreshold(strengthSetting), p, pre.centroids,
+    AnnSearch.searchGraphSeededIvf(g.nodes, g.edges, queries, k,
+      KnnSearch.scaleThreshold(strengthSetting), g.params, pre.centroids,
       ef, iters, escalatedNProbe(nProbe, predicate, pre.centroids),
       assignments = Some(pre.assignments
-        .join(n.select(col("id"), col("vector")), Seq("id"))),
-      idFilter = filteredIds(predicate))
+        .join(g.nodes.select(col("id"), col("vector")), Seq("id"))),
+      idFilter = filteredIds(predicate), snapshot = g.snapshot)
   }
 
   /** One-call adaptive serving — the production entry point that wires
@@ -1133,16 +1166,18 @@ class VectorStore private (
       : (AdaptiveSearch.Strategy, DataFrame) = {
     graft.functions.VectorFunctions.register(spark)
     validate(queries, "query_id", "query_vec")
-    val graph = currentIndexState.map { _ =>
-      val (n, e, _) = loadIndexOverlay()
-      (n, e)
-    }
+    // the graph's walk snapshot is built at a stamp's first graph walk,
+    // so a store the dispatcher serves exactly never builds one
+    val graph = currentIndexState.map(_ => servedGraph())
     val pq =
       if (Fs.exists(spark, s"$path/PQINDEX")) Some(servingPqIndex()) else None
     AdaptiveSearch.search(nodes, queries, k,
       KnnSearch.scaleThreshold(strengthSetting), params,
       exactCutoff = exactCutoff, skewCutoff = skewCutoff,
-      pqCutoff = pqCutoff, prebuiltPq = pq, prebuiltGraph = graph,
+      pqCutoff = pqCutoff, prebuiltPq = pq,
+      prebuiltGraph = graph.map(g => (g.nodes, g.edges)),
+      graphSnapshot =
+        graph.map(_.snapshot).getOrElse(GraphSnapshot.Unknown),
       idFilter = filteredIds(predicate),
       idFilterCount = predicate.map(filteredCount),
       statsHint = Some(memoStats()),

@@ -55,6 +55,40 @@ abstract class VectorKernel extends BinaryExpression with Serializable {
     })
 }
 
+/** The scalar similarity kernels over float arrays: the one
+  * definition that the interpreted `evalKernel` of [[CosineSimilarityExpr]]
+  * and [[EuclideanDistanceExpr]] and the fused graph walk
+  * ([[graft.operators.GraphSnapshot]]) all call, so their scores cannot
+  * drift. The generated code of the two expressions runs the same
+  * arithmetic in the same order (double accumulation over
+  * min(aLen, bLen) elements), which the walk parity spec pins bit for
+  * bit. */
+object ScalarKernels {
+  def cosine(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < n) {
+      val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
+      dot += x * y; na += x * x; nb += y * y; i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  def euclideanDist(a: ArrayData, b: ArrayData): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var s = 0.0; var i = 0
+    while (i < n) {
+      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
+      s += d * d; i += 1
+    }
+    math.sqrt(s)
+  }
+
+  /** 1/(1+dist): [[VectorFunctions.euclideanSim]]'s transform. */
+  def euclideanSim(a: ArrayData, b: ArrayData): Double =
+    1.0 / (1.0 + euclideanDist(a, b))
+}
+
 /** PUSHDOWN BARRIER: a value-identity wrapper DECLARED nondeterministic
   * so the optimizer cannot substitute the wrapped expression into pushed
   * predicates. The `withColumn("score", kernel).filter(score…)` shape
@@ -135,15 +169,8 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
        |$res = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
      """.stripMargin
   }
-  protected def evalKernel(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-    while (i < n) {
-      val x = a.getFloat(i).toDouble; val y = b.getFloat(i).toDouble
-      dot += x * y; na += x * x; nb += y * y; i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  protected def evalKernel(a: ArrayData, b: ArrayData): Double =
+    ScalarKernels.cosine(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -166,15 +193,8 @@ case class EuclideanDistanceExpr(left: Expression, right: Expression)
        |$res = java.lang.Math.sqrt($acc);
      """.stripMargin
   }
-  protected def evalKernel(a: ArrayData, b: ArrayData): Double = {
-    val n = math.min(a.numElements(), b.numElements())
-    var s = 0.0; var i = 0
-    while (i < n) {
-      val d = a.getFloat(i).toDouble - b.getFloat(i).toDouble
-      s += d * d; i += 1
-    }
-    math.sqrt(s)
-  }
+  protected def evalKernel(a: ArrayData, b: ArrayData): Double =
+    ScalarKernels.euclideanDist(a, b)
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -997,24 +1017,43 @@ case class MatVecExpr(left: Expression, right: Expression)
   * `expr("cosine_sim(a,b)")` in SQL text.
   */
 object VectorFunctions {
-  private val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "dot_product" -> (es => DotProductExpr(es(0), es(1))),
-    "cosine_sim" -> (es => CosineSimilarityExpr(es(0), es(1))),
-    "euclidean_dist" -> (es => EuclideanDistanceExpr(es(0), es(1))),
-    "pq_adc" -> (es => PqAdcExpr(es(0), es(1))),
-    "sq_l2" -> (es => SqL2Expr(es(0), es(1))),
-    "hamming64" -> (es => HammingExpr(es(0), es(1))),
-    "nearest_code" -> (es => NearestCodeExpr(es)),
-    "top_cells" -> (es => TopCellsExpr(es)),
-    "pq_lut" -> (es => PqLutExpr(es)),
-    "mat_vec" -> (es => MatVecExpr(es(0), es(1))),
-    "mmr_select" -> (es => MmrSelectExpr(es)),
-    "barrier" -> (es => BarrierExpr(es(0))),
+  /** (name, usage, builder) of every graft SQL function: the one table
+    * that [[register]] and `graft.GraftExtensions` both read. */
+  private[graft] val builders
+      : Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("dot_product", "dot_product(a, b) - float-array dot product",
+      es => DotProductExpr(es(0), es(1))),
+    ("cosine_sim", "cosine_sim(a, b) - cosine similarity",
+      es => CosineSimilarityExpr(es(0), es(1))),
+    ("euclidean_dist", "euclidean_dist(a, b) - euclidean distance",
+      es => EuclideanDistanceExpr(es(0), es(1))),
+    ("pq_adc", "pq_adc(codes, lut) - PQ asymmetric-distance lookup sum",
+      es => PqAdcExpr(es(0), es(1))),
+    ("sq_l2", "sq_l2(a, b) - symmetric SQ squared-L2 over int code arrays",
+      es => SqL2Expr(es(0), es(1))),
+    ("hamming64", "hamming64(a, b) - Hamming distance over packed " +
+      "sign-bit word arrays",
+      es => HammingExpr(es(0), es(1))),
+    ("nearest_code", "nearest_code(book, vec, books, ids, metric) - id of " +
+      "the nearest codebook entry",
+      es => NearestCodeExpr(es)),
+    ("top_cells", "top_cells(vec, cents, ids, p) - the p nearest centroid " +
+      "ids by cosine",
+      es => TopCellsExpr(es)),
+    ("pq_lut", "pq_lut(vec, books, subLen, metric) - flat PQ lookup table",
+      es => PqLutExpr(es)),
+    ("mat_vec", "mat_vec(vec, matrix) - dense matrix times vector",
+      es => MatVecExpr(es(0), es(1))),
+    ("mmr_select", "mmr_select(candidates, k, lambdaMicro, metric) - " +
+      "greedy maximal-marginal-relevance selection",
+      es => MmrSelectExpr(es)),
+    ("barrier", "barrier(x) - x, evaluated once per row",
+      es => BarrierExpr(es(0))),
   )
 
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, b) =>
+    builders.foreach { case (name, _, b) =>
       reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }

@@ -154,6 +154,9 @@ object AdaptiveSearch {
     * chosen strategy alongside the result for observability. Every arm
     * honors the same contract — (query_id, id, score, rn) with the
     * `minSim` floor applied — so callers never branch on the strategy.
+    * `graphSnapshot` is what the caller holds for `prebuiltGraph`'s walk
+    * ([[GraphSnapshot.Known]]); `queryCount` also arms the graph arms'
+    * bounded-frontier gates.
     *
     * `prebuiltPq` carries a persisted residual IVF-PQ index
     * ([[PqPrebuilt]]) from an index build, the way [[IvfIndex.search]]
@@ -167,6 +170,7 @@ object AdaptiveSearch {
       pqCutoff: Long = 5000000L,
       prebuiltPq: Option[PqPrebuilt] = None,
       prebuiltGraph: Option[(DataFrame, DataFrame)] = None,
+      graphSnapshot: GraphSnapshot.Known = GraphSnapshot.Unknown,
       seededNProbe: Int = 32,
       idFilter: Option[DataFrame] = None,
       idFilterCount: Option[Long] = None,
@@ -265,7 +269,8 @@ object AdaptiveSearch {
                 else pre.centroids.count()),
               assignments = Some(pre.assignments
                 .join(gn.select(col("id"), col("vector")), Seq("id"))),
-              idFilter = idFilter))
+              idFilter = idFilter, queryCount = queryCount,
+              snapshot = graphSnapshot))
           case (Some((gn, ge)), _) =>
             // same seed-probe escalation as the no-index arm below: the
             // filtered walk's recall rides on the seeds
@@ -277,7 +282,8 @@ object AdaptiveSearch {
               k, minSim, params, ef = math.max(64, k), idFilter = idFilter,
               seedProbeBuckets = spb,
               seedProbeAllOcc = if (idFilter.isEmpty) 0
-                else math.min(10L * spb, Int.MaxValue.toLong).toInt))
+                else math.min(10L * spb, Int.MaxValue.toLong).toInt,
+              queryCount = queryCount, snapshot = graphSnapshot))
           case _ =>
             // the no-index arm's selectivity lever: occupied-bucket
             // multi-probe (see [[AnnSearch.searchLshKeyed]]) — the
@@ -317,7 +323,8 @@ object AdaptiveSearch {
               queries, k, minSim, params, centroids,
               ef = math.max(64, k),
               nProbe = escalated(seededNProbe, cells.toLong),
-              idFilter = idFilter))
+              idFilter = idFilter, queryCount = queryCount,
+              snapshot = graphSnapshot))
           case _ =>
             // the plain-IVF probe starves under a selective filter the
             // same way the seeded arm's seeding does — escalate it too

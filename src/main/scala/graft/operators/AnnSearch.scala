@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions
 
 /** Approximate kNN search over a built index — the batch analogs of
@@ -12,11 +13,17 @@ import graft.functions.VectorFunctions
   *  - [[searchLsh]] (primary): bucket the queries with the same hyperplanes
   *    as the index, equi-join per band for candidates, score only those —
   *    candidate volume is O(Σ bucket overlap), not O(Q × N).
-  *  - [[searchGraph]]: iterative frontier expansion over the edge table —
-  *    the set-at-a-time analog of the reference's per-layer beam walk
-  *    (`hnsw.ts:301-375`): frontier ⋈ edges ⋈ nodes, score, keep top-ef per
-  *    query, repeat. Driver controls the (bounded) iteration count; each
-  *    step is a pair of hash joins, shuffled on graph keys.
+  *  - graph search ([[searchGraph]] and the seeded hybrids
+  *    [[searchGraphSeeded]], [[searchGraphSeededIvf]]): a frontier walk
+  *    over the edge table — the set-at-a-time analog of the reference's
+  *    per-layer beam walk (`hnsw.ts:301-375`): expand the frontier along
+  *    its out-edges, score, keep top-ef per query, repeat, then rank.
+  *    All three run one [[walk]]. A graph that fits the broadcast gate is
+  *    walked in memory: every hop and the final rank of a query run in
+  *    one task over a broadcast [[GraphSnapshot]], one exchange for the
+  *    whole walk. Past the gate each hop is a frontier ⋈ edges ⋈ nodes
+  *    join pair with a checkpoint every two hops, the form that scales
+  *    past what one executor can hold.
   */
 object AnnSearch {
 
@@ -320,21 +327,21 @@ object AnnSearch {
     * (the final rank scores seeds ∪ expansions with the true metric).
     * Tombstoned nodes stay routable mid-walk and are filtered from
     * results ([[searchGraph]]'s reference semantics). Output
-    * (query_id, id, score, rn) — the [[KnnSearch.knnExact]] contract. */
+    * (query_id, id, score, rn) — the [[KnnSearch.knnExact]] contract.
+    * `snapshot` and `queryCount` choose how the expansions run
+    * ([[walk]]). */
   def searchGraphSeeded(nodes: DataFrame, edges: DataFrame,
       queries: DataFrame, k: Int, minSim: Double, params: IndexParams,
       ef: Int = 64, iters: Int = 2,
       anchors: Option[Seq[Seq[Array[Float]]]] = None,
-      broadcastBytes: Long = 64L << 20,
+      broadcastBytes: Long = DefaultBroadcastBytes,
       seedShortlist: Int = 0,
       idFilter: Option[DataFrame] = None,
       seedProbeBuckets: Int = 1, seedProbeAllOcc: Int = 0,
       seedProjDim: Int = 0,
-      queryCount: Long = -1L): DataFrame = {
+      queryCount: Long = -1L,
+      snapshot: GraphSnapshot.Known = GraphSnapshot.Unknown): DataFrame = {
     require(ef >= k, s"ef $ef < k $k")
-    val withDel =
-      if (nodes.columns.contains("deleted")) nodes
-      else nodes.withColumn("deleted", lit(false))
     // seeds: the LSH candidates' top-ef by TRUE score (no similarity
     // floor yet — a floor here could empty the frontier and the final
     // rank applies it anyway). Data-derived `anchors` make the whole
@@ -343,7 +350,7 @@ object AnnSearch {
     // [[searchLshKeyed]] band-agreement shortlist); the expansions then
     // recover neighbors the truncated seed set missed via graph edges.
     // `idFilter` pre-filters seeds AND expansion candidates (see
-    // [[expandAndRank]]'s filtered-walk contract). The filtered-walk
+    // [[walk]]'s filtered-walk contract). The filtered-walk
     // contract puts the RECALL on the seed probe (expansions never route
     // through non-matching nodes), so a correlated filter starves this
     // arm exactly like plain LSH — `seedProbeBuckets`/`seedProbeAllOcc`
@@ -364,9 +371,11 @@ object AnnSearch {
         // score raw, so the hybrid's contract is unchanged.
         projDim = seedProjDim, projShortFactor = 8)
     }
-    expandAndRank(withDel, edges, seedSearch, queries, k, minSim,
-      params.metric, ef, iters, broadcastBytes, idFilter,
-      queryCount, params.m)
+    val withDel = withDeleted(nodes)
+    walk(withDel, edges, queries,
+      snapshotOf(snapshot, withDel, edges, params.dim, broadcastBytes),
+      Some(seedSearch), Seq(WalkLevel(0, ef, iters)), None, k, minSim,
+      params.metric, broadcastBytes, idFilter, queryCount, params.m)
   }
 
   /** THE selectivity-escalation rule, shared by every probed arm (the
@@ -412,134 +421,24 @@ object AnnSearch {
       queries: DataFrame, k: Int, minSim: Double, params: IndexParams,
       centroids: DataFrame, ef: Int = 64, iters: Int = 2, nProbe: Int = 32,
       assignments: Option[DataFrame] = None,
-      broadcastBytes: Long = 64L << 20,
+      broadcastBytes: Long = DefaultBroadcastBytes,
       idFilter: Option[DataFrame] = None,
-      queryCount: Long = -1L): DataFrame = {
+      queryCount: Long = -1L,
+      snapshot: GraphSnapshot.Known = GraphSnapshot.Unknown): DataFrame = {
     require(ef >= k, s"ef $ef < k $k")
     // the coarse quantizer AND the final rank are cosine — silently
     // serving a euclidean index would change both the top-k and the
     // threshold semantics vs every sibling search path
     require(params.metric == "cosine",
       s"IVF-seeded search is cosine-only; index metric is ${params.metric}")
-    val withDel =
-      if (nodes.columns.contains("deleted")) nodes
-      else nodes.withColumn("deleted", lit(false))
+    val withDel = withDeleted(nodes)
     val seeds = IvfIndex.search(withDel, centroids, queries, ef,
       Double.NegativeInfinity, nProbe, assignments, idFilter,
       broadcastBytes)
-    expandAndRank(withDel, edges, seeds, queries, k, minSim,
-      "cosine", ef, iters, broadcastBytes, idFilter,
-      queryCount, params.m)
-  }
-
-  /** The shared second half of every seeded hybrid: bounded level-0
-    * frontier expansions from `seeds`, then one true-metric rank over
-    * seeds ∪ expansions (so the hybrid can never do worse than its
-    * seeds). `nodes` must carry `deleted` (tombstones routable mid-walk,
-    * filtered from results).
-    *
-    * Filtered-walk contract (`idFilter`): expansion CANDIDATES restrict
-    * to the filtered set before scoring — the frontier holds only
-    * matching nodes, so a selective predicate can never crowd matching
-    * candidates out of the ef window with non-matching high scorers,
-    * results are provably ⊆ the filtered set, and per-hop work shrinks
-    * with the filtered fraction. The trade is that the walk does not
-    * route THROUGH non-matching nodes (their out-edges never fire); the
-    * filtered seed probe carries the recall — it lands in every probed
-    * cell/bucket independent of graph connectivity — and expansions add
-    * matching neighbors of matching seeds. Under very selective
-    * predicates raise nProbe/ef rather than relying on the walk. */
-  /** `queryCount` ≥ 0 arms the BOUNDED-FRONTIER broadcast gates (r15,
-    * guide §2.4/§3.1): the frontier is ≤ Q × ef narrow rows BY
-    * CONSTRUCTION (every hop re-caps it through the top-ef window) and
-    * the per-hop expansion is ≤ Q × ef × edgeCap rows (the build caps
-    * out-degree at M), so when those ARITHMETIC bounds fit
-    * `broadcastBytes` the hop joins broadcast the query-proportional
-    * side and the CORPUS-side relations (edge table, node re-attach)
-    * are never shuffled — without the gate every hop planned a
-    * sort-merge join that re-shuffled the edge and node tables because
-    * a checkpointed frontier has no usable stats. At 100 TB this is the
-    * difference between hops costing O(frontier) network and hops
-    * re-shuffling the graph per hop; past the gate the joins keep the
-    * old stats-driven shape. Callers that know Q (one memoized count)
-    * pass it; −1 keeps the pre-r15 plan exactly. */
-  private def expandAndRank(nodes: DataFrame, edges: DataFrame,
-      seeds: DataFrame, queries: DataFrame, k: Int, minSim: Double,
-      metric: String, ef: Int, iters: Int,
-      broadcastBytes: Long,
-      idFilter: Option[DataFrame] = None,
-      queryCount: Long = -1L, edgeCap: Int = 0): DataFrame = {
-    val sf = scoreFn(metric)
-    val topW = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("id").asc)
-    def topEf(df: DataFrame, n: Int): DataFrame =
-      df.withColumn("rn", row_number().over(topW))
-        .filter(col("rn") <= n).drop("rn")
-    // one exchange for dedup + rank: pre-clustering by query_id
-    // satisfies BOTH the (query_id, id) dedup's and the rank window's
-    // required distribution (partitioning expressions ⊆ clustering
-    // keys), so the old dedup-exchange → window-exchange pair collapses
-    // to a single hash(query_id) shuffle per hop
-    def dedupTopEf(df: DataFrame, n: Int): DataFrame =
-      topEf(df.repartition(
-          boundedPartitions(df.sparkSession, queryCount, ef),
-          col("query_id"))
-        .dropDuplicates("query_id", "id"), n)
-    val frontierFits = queryCount >= 0 &&
-      queryCount * ef.toLong * 32L * BroadcastOverheadX <= broadcastBytes
-    val candFits = queryCount >= 0 && edgeCap > 0 &&
-      queryCount * ef.toLong * edgeCap.toLong * 24L * BroadcastOverheadX <=
-        broadcastBytes
-    val qvs = KnnSearch.maybeBroadcast(
-      queries.select(col("query_id"), col("query_vec")), broadcastBytes)
-    val e0 = edges.filter(col("level") === 0).select(col("src"), col("dst"))
-    var frontier = seeds
-      .select(col("query_id"), col("id"), col("score"))
-      .localCheckpoint()
-    // Hops compose LAZILY, re-checkpointing only every 2 hops (the
-    // [[searchGraph]] cadence): each hop's (union ∪ expand) references
-    // the previous frontier twice, so the duplication factor is ≤ 4
-    // between checkpoints — bounded planning cost — while every eager
-    // checkpoint REMOVED is one fewer sequential action paying its own
-    // planning/scheduling round trip. r16 measured the walk rows
-    // spending ~half their wall BETWEEN jobs (driver planning +
-    // broadcast builds per action); dedupTopEf rows are deterministic
-    // (ties break by id), so a re-executed duplicated subtree yields
-    // identical rows and the hash-checked outputs are unchanged.
-    var sinceCp = 0
-    for (i <- 1 to iters) {
-      val fsrc = if (frontierFits) broadcast(frontier) else frontier
-      val cand = KnnSearch.restrictIds(fsrc
-        .join(e0, fsrc("id") === e0("src"))
-        .select(col("query_id"), col("dst").as("id"))
-        .dropDuplicates("query_id", "id"), idFilter)
-      val expanded = (if (candFits) broadcast(cand) else cand)
-        .join(nodes.select(col("id"), col("vector")), Seq("id"))
-        .join(qvs, Seq("query_id"))
-        .withColumn("score", sf(col("query_vec"), col("vector")))
-        .select(col("query_id"), col("id"), col("score"))
-      frontier = dedupTopEf(frontier.unionByName(expanded), ef)
-      sinceCp += 1
-      // cp every 2 hops, AND before the LAST hop when anything is
-      // pending: the final action then contains exactly one
-      // un-checkpointed hop, whose (union ∪ expand) duplicates only a
-      // checkpointed LEAF — never a hop subplan that would execute
-      // twice inside the final job (measured: the lazy-tail form
-      // re-ran hop 1 inside a18/a19's final action and gave the
-      // actions-saved win back)
-      if (i < iters && (sinceCp == 2 || i == iters - 1)) {
-        frontier = frontier.localCheckpoint(); sinceCp = 0
-      }
-    }
-    // the final rank materializes the last hop and the rank in ONE
-    // action — no eager checkpoint between them
-    val fout = if (frontierFits) broadcast(frontier) else frontier
-    fout
-      .join(nodes.filter(!col("deleted")).select(col("id")), Seq("id"))
-      .filter(col("score") > lit(minSim) && !isnan(col("score")))
-      .withColumn("rn", row_number().over(topW))
-      .filter(col("rn") <= k)
-      .select(col("query_id"), col("id"), col("score"), col("rn"))
+    walk(withDel, edges, queries,
+      snapshotOf(snapshot, withDel, edges, params.dim, broadcastBytes),
+      Some(seeds), Seq(WalkLevel(0, ef, iters)), None, k, minSim,
+      "cosine", broadcastBytes, idFilter, queryCount, params.m)
   }
 
   /** Graph-traversal ANN over the built (nodes, edges) index.
@@ -568,122 +467,284 @@ object AnnSearch {
   def searchGraph(nodes: DataFrame, edges: DataFrame, queries: DataFrame,
       k: Int, minSim: Double, params: IndexParams,
       ef: Int = 32, itersPerLevel: Int = 2, efUpper: Int = 8,
-      broadcastBytes: Long = 64L << 20,
+      broadcastBytes: Long = DefaultBroadcastBytes,
       routedOnly: Boolean = false,
-      queryCount: Long = -1L): DataFrame = {
-    val sf = scoreFn(params.metric)
+      queryCount: Long = -1L,
+      snapshot: GraphSnapshot.Known = GraphSnapshot.Unknown): DataFrame = {
+    val withDel = withDeleted(nodes)
+    val snap = snapshotOf(snapshot, withDel, edges, params.dim,
+      broadcastBytes)
+    val entryLevel = snap match {
+      case Some(s) =>
+        require(s.nodes == 0 || s.entryLevel >= 0,
+          "routed graph search needs the node table's `level` column")
+        if (s.nodes == 0) None else Some(s.entryLevel)
+      case None =>
+        val r = withDel.agg(max(col("level"))).head()
+        if (r.isNullAt(0)) None else Some(r.getInt(0))
+    }
+    entryLevel match {
+      case None => // empty index → empty result, not an NPE
+        withDel.sparkSession.emptyDataFrame
+          .select(lit(0L).as("query_id"), lit(0L).as("id"),
+            lit(0.0).as("score"), lit(0).as("rn")).limit(0)
+      case Some(top) =>
+        val levels = (top to 0 by -1).map(l =>
+          if (l > 0) WalkLevel(l, math.max(efUpper, k), 1)
+          else WalkLevel(0, ef, itersPerLevel))
+        // the reachability seeds join the frontier where the actual
+        // search happens — level 0 — so the upper-layer routing budget
+        // stays the reference's and the seeds aren't truncated by the
+        // narrow routing window
+        val seeds =
+          if (routedOnly) None
+          else Some(searchLsh(withDel, queries, ef,
+              Double.NegativeInfinity, params, broadcastBytes)
+            .select(col("query_id"), col("id"), col("score")))
+        walk(withDel, edges, queries, snap, None, levels, seeds, k, minSim,
+          params.metric, broadcastBytes, None, queryCount, params.m)
+    }
+  }
+
+  /** The `broadcastBytes` default of every search here. */
+  val DefaultBroadcastBytes: Long = 64L << 20
+
+  private def withDeleted(nodes: DataFrame): DataFrame =
+    if (nodes.columns.contains("deleted")) nodes
+    else nodes.withColumn("deleted", lit(false))
+
+  private def snapshotOf(known: GraphSnapshot.Known, nodes: DataFrame,
+      edges: DataFrame, dim: Int, broadcastBytes: Long)
+      : Option[GraphSnapshot] = known match {
+    case h: GraphSnapshot.Held => h.snapshot
+    case GraphSnapshot.Unknown =>
+      GraphSnapshot.fitting(nodes, edges, dim, broadcastBytes)
+  }
+
+  /** THE graph walk, shared by every graph search: from the `start`
+    * frontier (query_id, id, score) — or, when `None`, the entry layer
+    * (the nodes on `levels.head.level`) scored against every query and
+    * cut to that level's `ef` — run each [[WalkLevel]]'s hops; `seeds`
+    * (query_id, id, score) join the frontier when the walk reaches
+    * level 0. A hop scores the frontier's out-neighbors on the level
+    * with the true metric and keeps the best `ef` per query, deduped on
+    * (query_id, id), ties broken by id. The final rank keeps live
+    * (`nodes.deleted` false) rows with a non-NaN score above `minSim`,
+    * best `k` per query, as (query_id, id, score, rn): tombstoned nodes
+    * stay routable mid-walk and are filtered only here.
+    *
+    * Filtered-walk contract (`idFilter`): expansion CANDIDATES restrict
+    * to the filtered set before scoring — the frontier holds only
+    * matching nodes, so a selective predicate can never crowd matching
+    * candidates out of the ef window with non-matching high scorers,
+    * results are provably ⊆ the filtered set, and per-hop work shrinks
+    * with the filtered fraction. The trade is that the walk does not
+    * route THROUGH non-matching nodes (their out-edges never fire); the
+    * filtered seed probe carries the recall — it lands in every probed
+    * cell/bucket independent of graph connectivity — and expansions add
+    * matching neighbors of matching seeds. Under very selective
+    * predicates raise nProbe/ef rather than relying on the walk.
+    *
+    * Two executions, one result: with a `snapshot` (the graph fit the
+    * broadcast gate, [[GraphSnapshot.fitting]]) every hop and the final
+    * rank of a query run in one task over the broadcast arrays
+    * ([[fusedWalk]]); past the gate the hops run as joins over the
+    * edge and node tables ([[frameWalk]]), the only form that works on
+    * a graph too large to broadcast. */
+  private[operators] def walk(nodes: DataFrame, edges: DataFrame,
+      queries: DataFrame, snapshot: Option[GraphSnapshot],
+      start: Option[DataFrame],
+      levels: Seq[WalkLevel], seeds: Option[DataFrame], k: Int,
+      minSim: Double, metric: String, broadcastBytes: Long,
+      idFilter: Option[DataFrame], queryCount: Long, edgeCap: Int)
+      : DataFrame = snapshot match {
+    case Some(s) => fusedWalk(s, nodes, queries, start, levels, seeds, k,
+      minSim, metric, idFilter)
+    case None => frameWalk(nodes, edges, queries, start, levels, seeds, k,
+      minSim, metric, broadcastBytes, idFilter, queryCount, edgeCap)
+  }
+
+  private val FusedSchema = StructType(Seq(
+    StructField("query_id", LongType, nullable = false),
+    StructField("id", LongType, nullable = false),
+    StructField("score", DoubleType, nullable = false),
+    StructField("rn", IntegerType, nullable = false)))
+
+  /** [[walk]] over a broadcast snapshot: the start, seed and query rows
+    * meet in ONE exchange on query_id, and each query's group runs its
+    * whole walk ([[GraphData.walk]]) in the task — no per-hop join,
+    * checkpoint or action. The plan stays lazy: the seeding stages run
+    * inside the action that reads the result. An `idFilter` is collected
+    * once per call into a bitset over the snapshot's nodes (at most the
+    * snapshot's node count, which the gate bounds). A null start or seed
+    * score ranks as −∞: lowest, and never above `minSim`. */
+  private def fusedWalk(snap: GraphSnapshot, nodes: DataFrame,
+      queries: DataFrame, start: Option[DataFrame], levels: Seq[WalkLevel],
+      seeds: Option[DataFrame], k: Int, minSim: Double, metric: String,
+      idFilter: Option[DataFrame]): DataFrame = {
+    val data = snap.data
+    val allowed = idFilter.map { f =>
+      val g = data.value
+      val bits = new java.util.BitSet(snap.nodes)
+      f.select(col("id").cast("long")).collect().foreach { r =>
+        if (!r.isNullAt(0)) {
+          val i = g.indexOf(r.getLong(0))
+          if (i >= 0) bits.set(i)
+        }
+      }
+      bits
+    }.orNull
+    val vecType = ArrayType(FloatType)
+    def tagged(df: DataFrame, kind: Int): DataFrame =
+      df.select(col("query_id").cast("long").as("query_id"),
+        lit(kind).as("kind"), col("id").cast("long").as("id"),
+        col("score").cast("double").as("score"),
+        lit(null).cast(vecType).as("query_vec"))
+    val queryRows = queries.select(
+      col("query_id").cast("long").as("query_id"), lit(2).as("kind"),
+      lit(null).cast("long").as("id"), lit(null).cast("double").as("score"),
+      col("query_vec").cast(vecType).as("query_vec"))
+    val rows = (start.map(tagged(_, 0)).toSeq ++ seeds.map(tagged(_, 1))
+      :+ queryRows).reduce(_ union _)
+    val lv = levels.toArray
+    val startFromEntries = start.isEmpty
+    val hasSeeds = seeds.isDefined
+    rows.groupByKey((r: Row) => r.getLong(0))(Encoders.scalaLong)
+      .flatMapGroups { (qid: Long, group: Iterator[Row]) =>
+        var q: Array[Float] = null
+        val st = Array.newBuilder[(Long, Double)]
+        val sd = Array.newBuilder[(Long, Double)]
+        group.foreach { r =>
+          def row = (r.getLong(2),
+            if (r.isNullAt(3)) Double.NegativeInfinity else r.getDouble(3))
+          r.getInt(1) match {
+            case 0 => if (!r.isNullAt(2)) st += row
+            case 1 => if (!r.isNullAt(2)) sd += row
+            case _ => if (!r.isNullAt(4)) q = r.getSeq[Float](4).toArray
+          }
+        }
+        data.value.walk(metric, q, if (startFromEntries) null else st.result(),
+            if (hasSeeds) sd.result() else null, lv, allowed, k, minSim)
+          .iterator.zipWithIndex.map { case ((id, s), i) =>
+            Row(qid, id, s, i + 1)
+          }
+      }(Encoders.row(FusedSchema))
+      .select(col("query_id").cast(queries.schema("query_id").dataType),
+        col("id").cast(nodes.schema("id").dataType), col("score"),
+        col("rn"))
+  }
+
+  /** [[walk]] as DataFrame joins, for graphs past the snapshot gate.
+    *
+    * `queryCount` ≥ 0 arms the BOUNDED-FRONTIER broadcast gates (r15,
+    * guide §2.4/§3.1): the frontier is ≤ Q × ef narrow rows BY
+    * CONSTRUCTION (every hop re-caps it through the top-ef window) and
+    * the per-hop expansion is ≤ Q × ef × edgeCap rows (the build caps
+    * out-degree at M), so when those ARITHMETIC bounds fit
+    * `broadcastBytes` the hop joins broadcast the query-proportional
+    * side and the CORPUS-side relations (edge table, node re-attach)
+    * are never shuffled — without the gate every hop planned a
+    * sort-merge join that re-shuffled the edge and node tables because
+    * a checkpointed frontier has no usable stats. Past the gate the
+    * joins keep the stats-driven shape; −1 keeps it always.
+    *
+    * The frontier stays NARROW (query_id, id, score) through every
+    * window and checkpoint — query vectors re-attach per expansion from
+    * the (size-gated) broadcast query set, so no dim-width payload rides
+    * the per-query rank shuffles or the checkpointed blocks. */
+  private def frameWalk(nodes: DataFrame, edges: DataFrame,
+      queries: DataFrame, start: Option[DataFrame], levels: Seq[WalkLevel],
+      seeds: Option[DataFrame], k: Int, minSim: Double, metric: String,
+      broadcastBytes: Long, idFilter: Option[DataFrame], queryCount: Long,
+      edgeCap: Int): DataFrame = {
+    val sf = scoreFn(metric)
+    val ef = levels.last.ef // the level-0 search width
     val topW = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("id").asc)
     def topEf(df: DataFrame, n: Int): DataFrame =
-      df.withColumn("rn", row_number().over(topW)).filter(col("rn") <= n).drop("rn")
-    // the [[expandAndRank]] bounded-frontier gates (r15): frontier
-    // ≤ Q × ef and per-hop expansion ≤ Q × ef × M by construction, so
-    // when the arithmetic bound fits, hop joins broadcast the
-    // query-proportional side and never shuffle the edge/node tables
+      df.withColumn("rn", row_number().over(topW))
+        .filter(col("rn") <= n).drop("rn")
+    // one exchange for dedup + rank: pre-clustering by query_id
+    // satisfies BOTH the (query_id, id) dedup's and the rank window's
+    // required distribution (partitioning expressions ⊆ clustering
+    // keys), so the old dedup-exchange → window-exchange pair collapses
+    // to a single hash(query_id) shuffle per hop
     def dedupTopEf(df: DataFrame, n: Int): DataFrame =
       topEf(df.repartition(
-          boundedPartitions(nodes.sparkSession, queryCount, ef),
+          boundedPartitions(queries.sparkSession, queryCount, ef),
           col("query_id"))
         .dropDuplicates("query_id", "id"), n)
     val frontierFits = queryCount >= 0 &&
       queryCount * ef.toLong * 32L * BroadcastOverheadX <= broadcastBytes
-    val candFits = queryCount >= 0 &&
-      queryCount * ef.toLong * params.m.toLong * 24L * BroadcastOverheadX <=
+    val candFits = queryCount >= 0 && edgeCap > 0 &&
+      queryCount * ef.toLong * edgeCap.toLong * 24L * BroadcastOverheadX <=
         broadcastBytes
-
-    val withDel =
-      if (nodes.columns.contains("deleted")) nodes
-      else nodes.withColumn("deleted", lit(false))
-    val maxLevelRow = withDel.agg(max(col("level"))).head()
-    if (maxLevelRow.isNullAt(0)) // empty index → empty result, not an NPE
-      return withDel.sparkSession.emptyDataFrame
-        .select(lit(0L).as("query_id"), lit(0L).as("id"),
-          lit(0.0).as("score"), lit(0).as("rn")).limit(0)
-    val entryLevel = maxLevelRow.getInt(0)
-    val entries = withDel.filter(col("level") === entryLevel)
-      .select(col("id"), col("vector"))
-    // the frontier stays NARROW (query_id, id, score) through every window
-    // and checkpoint — query vectors re-attach per expansion from the
-    // broadcast query set, so no dim-width payload rides the per-query
-    // rank shuffles or the checkpointed blocks (same shape rule as the
-    // LSH path and IVF assignment; see those notes for the measurements)
-    // size-gated (the [[KnnSearch.knnExact]] rule): a large query batch
-    // must not pin Q-proportional state in every executor — past the
-    // gate the re-attach join and the entry cross join run unhinted
-    // (AQE shuffles them) at identical results
     val qvs = KnnSearch.maybeBroadcast(
       queries.select(col("query_id"), col("query_vec")), broadcastBytes)
-    var frontier = topEf(
-      entries.crossJoin(KnnSearch.maybeBroadcast(queries, broadcastBytes))
-        .withColumn("score", sf(col("query_vec"), col("vector")))
-        .select(col("query_id"), col("id"), col("score")),
-      if (entryLevel > 0) math.max(efUpper, k) else ef).localCheckpoint()
-
+    var frontier = (start match {
+      case Some(s) => s.select(col("query_id"), col("id"), col("score"))
+      case None =>
+        // size-gated (the [[KnnSearch.knnExact]] rule): past the gate the
+        // entry cross join runs unhinted at identical results
+        topEf(nodes.filter(col("level") === levels.head.level)
+            .select(col("id"), col("vector"))
+            .crossJoin(KnnSearch.maybeBroadcast(queries, broadcastBytes))
+            .withColumn("score", sf(col("query_vec"), col("vector")))
+            .select(col("query_id"), col("id"), col("score")),
+          levels.head.ef)
+    }).localCheckpoint()
     // Hops compose LAZILY across the whole descent, re-checkpointing
     // every 2 hops REGARDLESS of level boundaries: each hop's
     // (union ∪ expand) references the previous frontier twice, so the
     // duplication factor stays ≤ 4 between checkpoints — bounded
-    // planning cost — while every eager end-of-level checkpoint REMOVED
-    // is one fewer sequential action paying its own planning/broadcast
-    // round trip (r16 measured a03 spending ~half its wall BETWEEN
-    // jobs). The LAST hop plus the final rank run in ONE action.
-    // Lazy hop checkpoints (localCheckpoint(eager=false), one action
-    // driving the whole descent) were prototyped in r15 and REFUTED
-    // by measurement: steady-state wall was unchanged (~3.6 s at
-    // sf0.1×32) and the cold first call grew ~50% — the walk is not
-    // barrier-bound, it is per-hop work + planning, and deferring
-    // materialization only stacked the cold path deeper. Keep the
-    // eager form; don't re-prototype.
-    var hopsSinceCp = 0
-    for (level <- entryLevel to 0 by -1) {
-      val e = edges.filter(col("level") === level)
+    // planning cost — while every eager checkpoint REMOVED is one fewer
+    // sequential action paying its own planning/broadcast round trip
+    // (r16 measured the walk rows spending ~half their wall BETWEEN
+    // jobs). dedupTopEf rows are deterministic (ties break by id), so a
+    // re-executed duplicated subtree yields identical rows. The LAST hop
+    // plus the final rank run in ONE action. Lazy hop checkpoints
+    // (localCheckpoint(eager=false)) were prototyped in r15 and REFUTED:
+    // steady-state wall unchanged, the cold first call ~50% slower.
+    var pending = 0
+    for (lv <- levels) {
+      val e = edges.filter(col("level") === lv.level)
         .select(col("src"), col("dst"))
-      val (iters, levelEf) =
-        if (level > 0) (1, math.max(efUpper, k)) else (itersPerLevel, ef)
-      // the reachability seeds join the frontier where the actual search
-      // happens — level 0 — so the upper-layer routing budget stays the
-      // reference's and the seeds aren't truncated by the narrow
-      // routing window. The seeds' searchLsh subplan is the one LARGE
-      // subtree of the walk — checkpoint the merge so later hops
-      // duplicate a checkpointed leaf, never the bucket join itself.
-      if (level == 0 && !routedOnly) {
-        val seeds = searchLsh(withDel, queries, ef,
-            Double.NegativeInfinity, params, broadcastBytes)
-          .select(col("query_id"), col("id"), col("score"))
-        frontier = dedupTopEf(frontier.unionByName(seeds), ef)
+      // the seeds' subplan is the one LARGE subtree of the walk —
+      // checkpoint the merge so later hops duplicate a checkpointed
+      // leaf, never the seeding join itself
+      if (lv.level == 0) seeds.foreach { s =>
+        frontier = dedupTopEf(frontier.unionByName(s), lv.ef)
           .localCheckpoint()
-        hopsSinceCp = 0
+        pending = 0
       }
-      var cur = frontier
-      for (it <- 1 to iters) {
-        val lastHop = level == 0 && it == iters
-        // checkpoint before the LAST hop when anything is pending (the
-        // [[expandAndRank]] rule): the last hop's (union ∪ expand)
-        // references its input twice, so a pending hop below it would
-        // execute twice inside the final action
-        if (lastHop && hopsSinceCp > 0) {
-          cur = cur.localCheckpoint(); hopsSinceCp = 0
+      for (it <- 1 to lv.iters) {
+        val lastHop = lv.level == 0 && it == lv.iters
+        // checkpoint before the LAST hop when anything is pending: the
+        // last hop's (union ∪ expand) references its input twice, so a
+        // pending hop below it would execute twice inside the final
+        // action (measured: re-ran hop 1 inside a18/a19's final action)
+        if (lastHop && pending > 0) {
+          frontier = frontier.localCheckpoint(); pending = 0
         }
-        val csrc = if (frontierFits) broadcast(cur) else cur
-        val cand = csrc
-          .join(e, csrc("id") === e("src"))
+        val fsrc = if (frontierFits) broadcast(frontier) else frontier
+        val cand = KnnSearch.restrictIds(fsrc
+          .join(e, fsrc("id") === e("src"))
           .select(col("query_id"), col("dst").as("id"))
-          .dropDuplicates("query_id", "id")
+          .dropDuplicates("query_id", "id"), idFilter)
         val expanded = (if (candFits) broadcast(cand) else cand)
-          .join(withDel.select(col("id"), col("vector")), Seq("id"))
+          .join(nodes.select(col("id"), col("vector")), Seq("id"))
           .join(qvs, Seq("query_id"))
           .withColumn("score", sf(col("query_vec"), col("vector")))
           .select(col("query_id"), col("id"), col("score"))
-        cur = dedupTopEf(cur.unionByName(expanded), levelEf)
-        hopsSinceCp += 1
-        if (hopsSinceCp >= 2 && !lastHop) {
-          cur = cur.localCheckpoint(); hopsSinceCp = 0
+        frontier = dedupTopEf(frontier.unionByName(expanded), lv.ef)
+        pending += 1
+        if (pending >= 2 && !lastHop) {
+          frontier = frontier.localCheckpoint(); pending = 0
         }
       }
-      frontier = cur
     }
-    val live = withDel.filter(!col("deleted")).select(col("id"))
-    (if (frontierFits) broadcast(frontier) else frontier).join(live, Seq("id"))
+    (if (frontierFits) broadcast(frontier) else frontier)
+      .join(nodes.filter(!col("deleted")).select(col("id")), Seq("id"))
       .filter(col("score") > lit(minSim) && !isnan(col("score")))
       .withColumn("rn", row_number().over(topW)) // single final rank pass
       .filter(col("rn") <= k)

@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions
-import graft.operators.{AnnSearch, IndexBuild, IndexParams, KnnSearch}
+import graft.operators.{AnnSearch, GraphSnapshot, IndexBuild, IndexParams,
+  KnnSearch}
 
 /** ANN index + search queries. No DuckDB oracle (the hyperplane LSH and the
   * graph walk aren't reasonably SQL-expressible), so the driver records the
@@ -366,6 +367,19 @@ object AnnQueries {
         anchorPlanes(emb, nBands = 4, bits = 3))
       (n.localCheckpoint(), e.localCheckpoint())
     })
+
+  /** The graph rows' walk snapshot per (session, graph) — the
+    * [[anchoredFor]] memo rule applied to the broadcast their fused walk
+    * reads ([[graft.operators.GraphSnapshot]]): counted, gated and
+    * collected once per process, not once per pass. Session-keyed: a
+    * broadcast belongs to one SparkContext. */
+  private val snapshotMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String), Option[GraphSnapshot]]
+  private def snapshotFor(s: SparkSession, key: String, nodes: DataFrame,
+      edges: DataFrame): GraphSnapshot.Known =
+    GraphSnapshot.Held(snapshotMemo.getOrElseUpdate((s, key),
+      GraphSnapshot.fitting(nodes, edges, params.dim,
+        AnnSearch.DefaultBroadcastBytes)))
 
   /** The efConstruction=32 anchored base a13 merges into — same
     * memoize-once-per-dir shape as [[anchoredFor]]. Merge's contract is
@@ -1061,7 +1075,8 @@ object AnnQueries {
           VectorQueries.querySet(emb), k = 10, minSim = -2.0, params,
           ef = 48, iters = 2, anchors = Some(anchors),
           queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()))
+            VectorQueries.querySet(emb).count()),
+          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -1081,7 +1096,8 @@ object AnnQueries {
           VectorQueries.querySet(emb), k = 10, minSim = -2.0, params,
           centroids, ef = 48, iters = 2, nProbe = 3,
           queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()))
+            VectorQueries.querySet(emb).count()),
+          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -1119,7 +1135,8 @@ object AnnQueries {
         k = 10, minSim = -2.0,
         params.copy(m = params.m * (params.m + 1)),
         ef = 96, itersPerLevel = 2, efUpper = 16,
-        queryCount = memoCount(d, "queries")(queriesDf.count()))
+        queryCount = memoCount(d, "queries")(queriesDf.count()),
+        snapshot = snapshotFor(s, s"$d|walk2", nodes, walkEdges))
         .select(col("query_id"), col("id"))
       val exact = exactTower(s, s"$d|k10|all")(
           KnnSearch.knnExact(nodesDf, queriesDf, 10, minSim = -2.0))
@@ -1283,7 +1300,8 @@ object AnnQueries {
           centroids, ef = 48, iters = 2, nProbe = np,
           idFilter = Some(filt),
           queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()))
+            VectorQueries.querySet(emb).count()),
+          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
         .select(col("query_id"), col("id"))
       val exact = exactTower(s, s"$d|k10|mod3")(
           KnnSearch.knnExact(nodesDf.filter(col("id") % 3 === 0),

@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.functions.{col, lit}
-import graft.operators.{AdaptiveSearch, IndexParams, KnnSearch}
+import graft.operators.{AdaptiveSearch, GraphSnapshot, IndexBuild,
+  IndexParams, KnnSearch}
 import graft.queries.VectorQueries
 
 class AdaptiveSearchSpec extends SparkSpec {
@@ -139,6 +140,29 @@ class AdaptiveSearchSpec extends SparkSpec {
     assert(res.columns.toSeq === Seq("query_id", "id", "score", "rn"))
     assert(res.filter(col("score") <= 0.2).isEmpty)
     assert(res.select("query_id").distinct().count() === queriesDf.count())
+  }
+
+  test("seeded graph arm forwards queryCount: the frame walk's hop " +
+      "exchange is bounded by the query count") {
+    val emb = Tables.embeddings(spark, sf001)
+    val nodesDf = VectorQueries.asVectorTable(emb)
+    val queriesDf = VectorQueries.querySet(emb)
+    val p = IndexParams(m = 12, bucketBits = 4, nBands = 4)
+    val (gn, ge) = IndexBuild.build(nodesDf, p)
+    val (arm, res) = AdaptiveSearch.search(nodesDf, queriesDf, k = 5,
+      minSim = 0.2, p, exactCutoff = 0L, skewCutoff = 1.1,
+      prebuiltGraph = Some((gn.localCheckpoint(), ge.localCheckpoint())),
+      graphSnapshot = GraphSnapshot.Held(None),
+      queryCount = queriesDf.count())
+    assert(arm === AdaptiveSearch.UseGraphSeeded)
+    // Q × ef × 32 B is far below 4 MB, so a forwarded count sizes the
+    // hop exchange at one partition; without it the exchange takes the
+    // session's 4
+    val parts = res.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical
+          .RepartitionByExpression => r.numPartitions
+    }
+    assert(parts.nonEmpty && parts.forall(_ == 1), parts)
   }
 
   test("PQ arm accepts a prebuilt residual index and matches the in-line " +

@@ -274,8 +274,11 @@ class AnnSpec extends SparkSpec {
   test("graph search checkpoints before the last hop: the final action " +
       "holds exactly one hop subplan") {
     val (nodes, edges) = IndexBuild.build(nodesDf, params)
+    // the frame walk (the path past the snapshot gate) is the one that
+    // hops through joins and checkpoints
     val out = AnnSearch.searchGraph(nodes, edges, queriesDf, k = 10,
-      minSim = -2.0, params, ef = 32, itersPerLevel = 2)
+      minSim = -2.0, params, ef = 32, itersPerLevel = 2,
+      snapshot = graft.operators.GraphSnapshot.Held(None))
     // each hop's dedup repartitions by query_id; a pending hop under the
     // last one would appear twice more (its union and expand branches)
     val hops = out.queryExecution.optimizedPlan.collect {
@@ -284,6 +287,29 @@ class AnnSpec extends SparkSpec {
     }
     assert(hops.size === 1, out.queryExecution.optimizedPlan)
     assert(out.count() > 0)
+  }
+
+  test("searchAuto on a small graph store walks in memory: no hop " +
+      "exchange, no checkpoint") {
+    val store = VectorStore.openOrCreate(spark,
+      java.nio.file.Files.createTempDirectory("graft-walk").toString,
+      params)
+    store.addBatch(nodesDf.select("id", "vector"))
+    store.rebuild()
+    val (arm, res) = store.searchAuto(queriesDf, 10, strengthSetting = 0,
+      exactCutoff = 10, skewCutoff = 1.1)
+    assert(arm === graft.operators.AdaptiveSearch.UseGraphSeeded)
+    // the frame walk repartitions by query_id at every hop and
+    // checkpoints the frontier; the fused walk does neither
+    val plan = res.queryExecution.optimizedPlan
+    assert(plan.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical
+          .RepartitionByExpression => r
+    }.isEmpty, plan)
+    assert(plan.collect {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l
+    }.isEmpty, plan)
+    assert(recallAt(10, res) > 0.4)
   }
 
   test("graph search recall@10 beats 0.4 and excludes tombstones") {

@@ -131,7 +131,7 @@ class FilteredSearchSpec extends SparkSpec {
       PqIndex.encode(nodesDf, cb, m = 8, subLen = 8))
     // 1/10 selectivity × seededNProbe 1 → escalated probe = all 10 cells;
     // without escalation a single probed cell holds ~5 matching rows and
-    // the walk cannot recover the rest (expandAndRank's filtered-walk
+    // the walk cannot recover the rest (AnnSearch.walk's filtered-walk
     // contract: expansions only reach matching neighbors of matching
     // seeds)
     val p10: Column = col("id") % 10 === 0

@@ -10,13 +10,18 @@ import org.apache.spark.sql.SparkSessionExtensions
 class GraftExtensionsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("injects all eight functions with working builders") {
+  test("injects the VectorFunctions set plus topk_ids and bloom_might_contain") {
     val ext = new SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw; builders enumerated below
     val fns = new GraftExtensions().functions
+    // derived, not hand-kept: every function `VectorFunctions.register`
+    // registers, plus the two registered elsewhere
     assert(fns.map(_._1).sorted ===
-      Seq("bloom_might_contain", "cosine_sim", "dot_product",
-        "euclidean_dist", "hamming64", "pq_adc", "sq_l2", "topk_ids"))
+      (graft.functions.VectorFunctions.builders.map(_._1) ++
+        Seq("bloom_might_contain", "topk_ids")).sorted)
+    assert(fns.map(_._1).toSet.size === fns.size)
+    Seq("nearest_code", "top_cells", "pq_lut", "mat_vec", "mmr_select",
+      "barrier").foreach(n => assert(fns.exists(_._1 == n), n))
     // builders produce resolvable expressions
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.ArrayData
