@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
-import graft.operators.{AnnSearch, IndexBuild, IndexParams, KnnSearch}
+import graft.operators.{AnnSearch, GraphSnapshot, IndexBuild, IndexParams,
+  KnnSearch}
 
 /** Manual scale probe for the GRAPH search paths only (not part of the
   * driver harness): the routed frontier walk (a03's shape) vs the
@@ -71,6 +72,10 @@ object GraphProbe {
       val ni = r._1.localCheckpoint(); val e = r._2.localCheckpoint()
       e.count(); (ni, e)
     }
+    // the walk's snapshot, measured once per graph outside the timed arms
+    val snap = GraphSnapshot.Held(GraphSnapshot.fitting(nodesIdx, edges,
+      dim, AnnSearch.DefaultBroadcastBytes))
+    snap.snapshot
 
     if (ivfSweep) {
       val cells = math.max(16, math.sqrt(n.toDouble).toInt)
@@ -88,7 +93,7 @@ object GraphProbe {
         val (rows, t) = timed {
           AnnSearch.searchGraphSeededIvf(nodesIdx, edges, queries, 10,
               minSim = -2.0, params, ivfPre._1, ef = 64, iters = iters,
-              nProbe = nProbe, assignments = Some(ivfPre._2))
+              nProbe = nProbe, assignments = Some(ivfPre._2), snapshot = snap)
             .select("query_id", "id").collect()
         }
         s"""{"n_probe":$nProbe,"iters":$iters,"sec":$t,""" +
@@ -122,7 +127,7 @@ object GraphProbe {
             AnnSearch.searchGraphSeededIvf(nodesIdx, edges, queries, 10,
                 minSim = -2.0, params, ivfPre._1, ef = 64, iters = 2,
                 nProbe = nProbe, assignments = Some(ivfPre._2),
-                idFilter = Some(idF))
+                idFilter = Some(idF), snapshot = snap)
               .select("query_id", "id").collect()
           }
           val rec = rows.map(r => (r.getLong(0), r.getLong(1)))
@@ -144,7 +149,7 @@ object GraphProbe {
     }
     val (graphRows, tGraph) = timed {
       AnnSearch.searchGraph(nodesIdx, edges, queries, 10, minSim = -2.0,
-          params, ef = 96, itersPerLevel = 3, efUpper = 16)
+          params, ef = 96, itersPerLevel = 3, efUpper = 16, snapshot = snap)
         .select("query_id", "id").collect()
     }
     // the bare routed descent (routedOnly) — the r8 hop-budget wall,
@@ -152,19 +157,20 @@ object GraphProbe {
     val (routedRows, tRouted) = timed {
       AnnSearch.searchGraph(nodesIdx, edges, queries, 10, minSim = -2.0,
           params, ef = 96, itersPerLevel = 3, efUpper = 16,
-          routedOnly = true)
+          routedOnly = true, snapshot = snap)
         .select("query_id", "id").collect()
     }
     val (seededRows, tSeeded) = timed {
       AnnSearch.searchGraphSeeded(nodesIdx, edges, queries, 10,
-          minSim = -2.0, params, ef = 64, iters = 2)
+          minSim = -2.0, params, ef = 64, iters = 2, snapshot = snap)
         .select("query_id", "id").collect()
     }
     // JL-projected seeding (the high-dim serve lever; facade default at
     // dim ≥ 192): seeds score in 32 projected dims, top-8·ef re-rank raw
     val (jlSeededRows, tJlSeeded) = timed {
       AnnSearch.searchGraphSeeded(nodesIdx, edges, queries, 10,
-          minSim = -2.0, params, ef = 64, iters = 2, seedProjDim = 32)
+          minSim = -2.0, params, ef = 64, iters = 2, seedProjDim = 32,
+          snapshot = snap)
         .select("query_id", "id").collect()
     }
     // the band-agreement shortlist bounds the seeding scan's true-score
@@ -173,7 +179,7 @@ object GraphProbe {
     val (shortRows, tShort) = timed {
       AnnSearch.searchGraphSeeded(nodesIdx, edges, queries, 10,
           minSim = -2.0, params, ef = 64, iters = 2,
-          seedShortlist = 512)
+          seedShortlist = 512, snapshot = snap)
         .select("query_id", "id").collect()
     }
     // IVF-seeded hybrid: coarse-quantizer seeds bound the seeding stage
@@ -190,7 +196,7 @@ object GraphProbe {
     val (ivfSeededRows, tIvfSeeded) = timed {
       AnnSearch.searchGraphSeededIvf(nodesIdx, edges, queries, 10,
           minSim = -2.0, params, ivfPre._1, ef = 64, iters = 2,
-          nProbe = 8, assignments = Some(ivfPre._2))
+          nProbe = 8, assignments = Some(ivfPre._2), snapshot = snap)
         .select("query_id", "id").collect()
     }
     println(s"""{"n":$n,"dim":$dim,"build_sec":$tBuild,""" +

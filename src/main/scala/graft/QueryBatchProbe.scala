@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.operators.{AnnSearch, IndexBuild, IndexParams, IvfIndex,
-  KnnSearch}
+import graft.operators.{AnnSearch, GraphSnapshot, IndexBuild, IndexParams,
+  IvfIndex, KnnSearch}
 
 /** Manual scale probe for LARGE QUERY BATCHES: the serving arms were
   * measured at harness-sized query sets (~100 rows) where a forced
@@ -81,10 +81,13 @@ object QueryBatchProbe {
     val p = IndexParams(dim = dim)
     lazy val graphArt = {
       val (gn, ge) = IndexBuild.build(nodes, p)
-      (gn.localCheckpoint(), ge.localCheckpoint())
+      val (gnC, geC) = (gn.localCheckpoint(), ge.localCheckpoint())
+      (gnC, geC, GraphSnapshot.Held(GraphSnapshot.fitting(gnC, geC, dim,
+        AnnSearch.DefaultBroadcastBytes)))
     }
     def gnC = graphArt._1
     def geC = graphArt._2
+    def snapC = graphArt._3
     // residual IVF-PQ serving artifacts (the compressed arm): sample
     // codebooks — quality is not what this probe measures, the
     // query-proportional LUT table is (m·ksub doubles per query:
@@ -122,7 +125,7 @@ object QueryBatchProbe {
         .select("query_id", "id").count())
       arms ++= arm("seeded")(AnnSearch.searchGraphSeededIvf(gnC, geC,
         queries, 10, minSim = -2.0, p, centroids, ef = 64,
-        nProbe = 8, assignments = Some(assignments))
+        nProbe = 8, assignments = Some(assignments), snapshot = snapC)
         .select("query_id", "id").count())
       // the SHIPPED PQ serving arm (euclidean residual ADC): its LUT is
       // per (query, probed cell) — Q × nProbe × m·ksub doubles, the

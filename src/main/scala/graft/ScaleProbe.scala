@@ -113,6 +113,10 @@ object ScaleProbe {
     val recall = annRows.map(r => (r.getLong(0), r.getLong(1)))
       .count(exact.contains).toDouble / exact.size
     val nEdges = edges.count()
+    // the walk's snapshot, measured once per graph outside the timed arms
+    val snap = GraphSnapshot.Held(GraphSnapshot.fitting(nodesIdx, edges,
+      dim, AnnSearch.DefaultBroadcastBytes))
+    snap.snapshot
 
     // graph-traversal search over the index just built (a03's path): the
     // one search whose JOB COUNT grows with levelMax (one frontier
@@ -120,7 +124,7 @@ object ScaleProbe {
     // bounds it instead of extrapolating from fixture scale
     val (graphRows, tGraph) = timed {
       AnnSearch.searchGraph(nodesIdx, edges, queries, 10, minSim = -2.0,
-          params, ef = 96, itersPerLevel = 3, efUpper = 16)
+          params, ef = 96, itersPerLevel = 3, efUpper = 16, snapshot = snap)
         .select("query_id", "id").collect()
     }
     val graphRecall = graphRows.map(r => (r.getLong(0), r.getLong(1)))
@@ -129,7 +133,7 @@ object ScaleProbe {
     // (no cross-graph routing) — judged against the same exact set
     val (seededRows, tSeeded) = timed {
       AnnSearch.searchGraphSeeded(nodesIdx, edges, queries, 10,
-          minSim = -2.0, params, ef = 64, iters = 2)
+          minSim = -2.0, params, ef = 64, iters = 2, snapshot = snap)
         .select("query_id", "id").collect()
     }
     val seededRecall = seededRows.map(r => (r.getLong(0), r.getLong(1)))
@@ -141,7 +145,7 @@ object ScaleProbe {
     val (jlRows, tJl) = timed {
       AnnSearch.searchGraphSeeded(nodesIdx, edges, queries, 10,
           minSim = -2.0, params, ef = 64, iters = 2,
-          seedProjDim = 32)
+          seedProjDim = 32, snapshot = snap)
         .select("query_id", "id").collect()
     }
     val jlRecall = jlRows.map(r => (r.getLong(0), r.getLong(1)))

@@ -760,21 +760,12 @@ class VectorStore private (
   /** One INDEX pointer stamp's served graph, with the walk's broadcast
     * [[operators.GraphSnapshot]] built at the stamp's first graph search
     * (never in [[rebuild]] or a merge, which do not walk) from the same
-    * overlay relations, and destroyed when the stamp is evicted. */
+    * overlay relations. */
   private final class ServedIndex(val nodes: DataFrame, val edges: DataFrame,
       val memb: DataFrame, val params: IndexParams) {
-    private var snap: Option[Option[GraphSnapshot]] = None
-    def snapshot: GraphSnapshot.Known = GraphSnapshot.Held(synchronized {
-      snap.getOrElse {
-        val s = GraphSnapshot.fitting(nodes, edges, params.dim,
-          AnnSearch.DefaultBroadcastBytes)
-        snap = Some(s)
-        s
-      }
-    })
-    def release(): Unit = synchronized {
-      snap.foreach(_.foreach(_.destroy())); snap = None
-    }
+    val snapshot: GraphSnapshot.Known = GraphSnapshot.Held(
+      GraphSnapshot.fitting(nodes, edges, params.dim,
+        AnnSearch.DefaultBroadcastBytes))
   }
 
   /** The served graph overlay plus its walk snapshot, all of one INDEX
@@ -787,12 +778,12 @@ class VectorStore private (
     // UNCHANGED chain reuses the already-checkpointed relations and the
     // fixed per-serve overlay cost disappears after the first call. Any
     // mutation flips the pointer → new stamp → fresh overlay; stale
-    // stamps evict (their checkpointed blocks unpersist with GC, their
-    // base-side scans point at dirs the prune may reclaim post-grace;
-    // their snapshot broadcast is destroyed now).
+    // stamps evict (their checkpointed blocks and snapshot broadcast
+    // unpersist with GC, so a search still reading the old generation
+    // keeps them; their base-side scans point at dirs the prune may
+    // reclaim post-grace).
     val stamp = pointerStamp("INDEX")
-    overlayMemo.keys.foreach { s =>
-      if (s != stamp) overlayMemo.remove(s).foreach(_.release()) }
+    overlayMemo.keys.foreach(s => if (s != stamp) overlayMemo.remove(s))
     overlayMemo.getOrElseUpdate(stamp, {
       val (n, e, m, p) = computeIndexOverlayFull()
       new ServedIndex(n, e, m, p)

@@ -215,6 +215,13 @@ object AdaptiveSearch {
     def escalated(base: Int, cells: Long): Int =
       if (idFilter.isEmpty || nAll == 0L) base
       else AnnSearch.escalatedProbes(base, n, nAll, cells)
+    // a corpus past the snapshot gate rules the walk's snapshot out
+    // without counting the graph
+    val snapshot = graphSnapshot match {
+      case GraphSnapshot.Unknown if GraphSnapshot.bytesFor(nAll, params.dim,
+          0L) > AnnSearch.DefaultBroadcastBytes => GraphSnapshot.Held(None)
+      case known => known
+    }
     decide(n, share, exactCutoff = exactCutoff, skewCutoff = skewCutoff,
         pqCutoff = pqCutoff,
         pqEligible = params.dim % mSub == 0) match {
@@ -270,7 +277,7 @@ object AdaptiveSearch {
               assignments = Some(pre.assignments
                 .join(gn.select(col("id"), col("vector")), Seq("id"))),
               idFilter = idFilter, queryCount = queryCount,
-              snapshot = graphSnapshot))
+              snapshot = snapshot))
           case (Some((gn, ge)), _) =>
             // same seed-probe escalation as the no-index arm below: the
             // filtered walk's recall rides on the seeds
@@ -283,7 +290,7 @@ object AdaptiveSearch {
               seedProbeBuckets = spb,
               seedProbeAllOcc = if (idFilter.isEmpty) 0
                 else math.min(10L * spb, Int.MaxValue.toLong).toInt,
-              queryCount = queryCount, snapshot = graphSnapshot))
+              queryCount = queryCount, snapshot = snapshot))
           case _ =>
             // the no-index arm's selectivity lever: occupied-bucket
             // multi-probe (see [[AnnSearch.searchLshKeyed]]) — the
@@ -324,7 +331,7 @@ object AdaptiveSearch {
               ef = math.max(64, k),
               nProbe = escalated(seededNProbe, cells.toLong),
               idFilter = idFilter, queryCount = queryCount,
-              snapshot = graphSnapshot))
+              snapshot = snapshot))
           case _ =>
             // the plain-IVF probe starves under a selective filter the
             // same way the seeded arm's seeding does — escalate it too

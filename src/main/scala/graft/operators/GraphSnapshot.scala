@@ -6,18 +6,21 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.unsafe.Platform
+import scala.collection.mutable.ArrayBuilder
 import graft.functions.ScalarKernels
 
 /** One graph in primitive arrays: node `i` has id `ids(i)` (ids ascending,
-  * so index order is id order), vector `vecs(vecOff(i) until vecOff(i+1))`
-  * and tombstone flag `deleted(i)`; level `l`'s out-neighbors of node `i`
-  * are `adj(l)(adjOff(l)(i) until adjOff(l)(i+1))`, as node indices.
+  * so index order is id order), tombstone flag `deleted(i)` and its
+  * vector at bytes `vecOff(i) until vecOff(i+1)` of `vecs`, laid out as
+  * an `UnsafeArrayData` (the form the SQL kernels read, so a score reads
+  * it in place); level `l`'s out-neighbors of node `i` are
+  * `adj(l)(adjOff(l)(i) until adjOff(l)(i+1))`, as node indices.
   * `entries` are the nodes on the top node level `entryLevel` (−1 when
   * the node table has no `level` column). */
 private[operators] final class GraphData(
     val ids: Array[Long],
     val vecOff: Array[Int],
-    val vecs: Array[Float],
+    val vecs: Array[Byte],
     val deleted: Array[Boolean],
     val entryLevel: Int,
     val entries: Array[Int],
@@ -90,20 +93,17 @@ private[operators] final class GraphData(
       .take(k).map { case (i, s) => (ids(i), s) }
   }
 
-  /** Node vectors as the array form the SQL kernels read, built once
-    * per JVM that holds the snapshot. */
-  @transient private lazy val vectors: Array[ArrayData] =
-    Array.tabulate(ids.length)(i => UnsafeArrayData.fromPrimitiveArray(
-      vecs, Platform.FLOAT_ARRAY_OFFSET + 4 * vecOff(i),
-      vecOff(i + 1) - vecOff(i), 4))
-
   /** The walk's score of node `i` against query vector `q`: the scalar
     * kernel `cosine_sim` / `euclidean_dist` evaluate. */
-  def score(metric: String, q: ArrayData, i: Int): Double =
+  def score(metric: String, q: ArrayData, i: Int): Double = {
+    val v = new UnsafeArrayData()
+    v.pointTo(vecs, Platform.BYTE_ARRAY_OFFSET + vecOff(i),
+      vecOff(i + 1) - vecOff(i))
     metric match {
-      case "euclidean" => ScalarKernels.euclideanSim(q, vectors(i))
-      case _ => ScalarKernels.cosine(q, vectors(i))
+      case "euclidean" => ScalarKernels.euclideanSim(q, v)
+      case _ => ScalarKernels.cosine(q, v)
     }
+  }
 }
 
 /** One level of a walk: `iters` hops over level `level`'s edges, each
@@ -124,13 +124,13 @@ private[operators] object GraphData {
 
 /** A broadcast [[GraphData]] of a graph small enough to ship whole to
   * every executor, which the fused walk ([[AnnSearch]]) reads in place of
-  * per-hop joins. `bytes` is the arithmetic size the gate measured. */
+  * per-hop joins. `bytes` is the arithmetic size the gate measured.
+  * Nothing destroys it: the ContextCleaner frees its blocks once no owner
+  * and no result DataFrame refers to it, so a built result stays
+  * readable. */
 final class GraphSnapshot private (
     private[operators] val data: Broadcast[GraphData],
-    val nodes: Int, val entryLevel: Int, val bytes: Long) {
-  /** Frees the broadcast on the driver and the executors. */
-  def destroy(): Unit = data.destroy()
-}
+    val nodes: Int, val entryLevel: Int, val bytes: Long)
 
 object GraphSnapshot {
 
@@ -139,21 +139,29 @@ object GraphSnapshot {
   /** Nothing: the walk counts the graph on this call and snapshots it if
     * it fits the gate. */
   case object Unknown extends Known
-  /** The caller's memoized outcome of that measurement, read only when a
-    * walk runs: the snapshot, or `None` when the graph is past the gate. */
+  /** The caller's outcome of that measurement: the snapshot, or `None`
+    * when the graph is past the gate. Measured at the first walk that
+    * reads it, then kept. */
   final class Held private (read: () => Option[GraphSnapshot])
       extends Known {
-    def snapshot: Option[GraphSnapshot] = read()
+    lazy val snapshot: Option[GraphSnapshot] = read()
   }
   object Held {
     def apply(snapshot: => Option[GraphSnapshot]): Held =
       new Held(() => snapshot)
   }
 
-  /** The snapshot's arithmetic size: per node an 8-byte id, a `dim`-float
-    * vector and a tombstone byte; per edge one int. */
+  /** Bytes of one `dim`-float vector in `UnsafeArrayData` layout: an
+    * element count, a null bitmap word per 64 elements, the values padded
+    * to a word. */
+  def vectorBytes(dim: Int): Long =
+    8L * (1L + (dim + 63L) / 64L + (4L * dim + 7L) / 8L)
+
+  /** The snapshot's arithmetic size: per node an 8-byte id, a 4-byte
+    * vector offset, a tombstone byte and its vector ([[vectorBytes]]);
+    * per edge one int. */
   def bytesFor(nodes: Long, dim: Int, edges: Long): Long =
-    nodes * (4L * dim + 9L) + 4L * edges
+    nodes * (13L + vectorBytes(dim)) + 4L * edges
 
   /** Count `nodes` (id, vector[, deleted][, level]) and `edges`
     * (level, src, dst); when their [[bytesFor]] fits `broadcastBytes`,
@@ -167,7 +175,8 @@ object GraphSnapshot {
     else {
       val e = edges.count()
       val bytes = bytesFor(n, dim, e)
-      if (bytes > broadcastBytes) None
+      // one byte array holds every vector
+      if (bytes > broadcastBytes || bytes >= Int.MaxValue) None
       else build(nodes, edges).map { d =>
         val sc = nodes.sparkSession.sparkContext
         new GraphSnapshot(sc.broadcast(d), d.ids.length, d.entryLevel, bytes)
@@ -175,32 +184,88 @@ object GraphSnapshot {
     }
   }
 
+  /** One partition's nodes, packed where they are read: `sizes(t)` bytes
+    * of `vecs` hold node `t`'s vector. `complete` is false when the
+    * partition held a null id or vector. */
+  private final class NodeBlock(val ids: Array[Long], val sizes: Array[Int],
+      val vecs: Array[Byte], val deleted: Array[Boolean],
+      val levels: Array[Int], val complete: Boolean) extends Serializable
+
+  /** The graph in the snapshot's arrays. Both tables arrive as one packed
+    * block of primitive arrays per partition, never as a row object per
+    * node or edge, so the driver's peak is a small multiple of the
+    * snapshot's [[bytesFor]]: the collected blocks, then the arrays they
+    * are copied into (edges arrive as 12-byte node-index triples). */
   private def build(nodes: DataFrame, edges: DataFrame): Option[GraphData] = {
     val cols = nodes.columns.toSet
-    val rows = nodes.select(col("id").cast("long"), col("vector"),
+    val blocks = nodes.select(col("id").cast("long"),
+        col("vector").cast("array<float>"),
         (if (cols("deleted")) col("deleted") else lit(false)),
         (if (cols("level")) col("level").cast("int")
          else lit(null).cast("int")))
-      .collect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val sorted = rows.sortBy(_.getLong(0))
-    val ids = sorted.map(_.getLong(0))
-    if (ids.indices.drop(1).exists(i => ids(i) == ids(i - 1))) return None
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val ids = new ArrayBuilder.ofLong; val sizes = new ArrayBuilder.ofInt
+        val del = new ArrayBuilder.ofBoolean; val lv = new ArrayBuilder.ofInt
+        var buf = new Array[Byte](1 << 16); var used = 0
+        var complete = true
+        rows.foreach { r =>
+          if (r.isNullAt(0) || r.isNullAt(1)) complete = false
+          else {
+            val v = r.getArray(1) match {
+              case u: UnsafeArrayData => u
+              case a => UnsafeArrayData.fromPrimitiveArray(a.toFloatArray())
+            }
+            val size = v.getSizeInBytes
+            if (used + size > buf.length)
+              buf = java.util.Arrays.copyOf(buf,
+                math.max(used + size, math.min(2L * buf.length,
+                  Int.MaxValue - 8L).toInt))
+            v.writeToMemory(buf, Platform.BYTE_ARRAY_OFFSET + used)
+            used += size
+            ids += r.getLong(0); sizes += size
+            // `!deleted` keeps only rows whose flag is false: a null flag
+            // is not live at the final rank, the frame walk's filter
+            del += r.isNullAt(2) || r.getBoolean(2)
+            lv += (if (r.isNullAt(3)) -1 else r.getInt(3))
+          }
+        }
+        Iterator.single(new NodeBlock(ids.result(), sizes.result(),
+          java.util.Arrays.copyOf(buf, used), del.result(), lv.result(),
+          complete))
+      }.collect()
+    if (blocks.exists(!_.complete)) return None
+    val ids = Array.concat(blocks.map(_.ids).toIndexedSeq: _*)
+    java.util.Arrays.sort(ids)
     val n = ids.length
+    if ((1 until n).exists(i => ids(i) == ids(i - 1))) return None
+    // each node's place in id order, in block order
+    val pos = Array.concat(blocks.map(
+      _.ids.map(java.util.Arrays.binarySearch(ids, _))).toIndexedSeq: _*)
     val vecOff = new Array[Int](n + 1)
+    val deleted = new Array[Boolean](n)
+    val levels = new Array[Int](n)
+    var j = 0
+    blocks.foreach { b =>
+      var t = 0
+      while (t < b.ids.length) {
+        val p = pos(j)
+        vecOff(p + 1) = b.sizes(t); deleted(p) = b.deleted(t)
+        levels(p) = b.levels(t); t += 1; j += 1
+      }
+    }
     var i = 0
-    while (i < n) {
-      vecOff(i + 1) = vecOff(i) + sorted(i).getSeq[Float](1).length; i += 1
+    while (i < n) { vecOff(i + 1) += vecOff(i); i += 1 }
+    val vecs = new Array[Byte](vecOff(n))
+    j = 0
+    blocks.indices.foreach { bi =>
+      val b = blocks(bi)
+      var t = 0; var src = 0
+      while (t < b.ids.length) {
+        System.arraycopy(b.vecs, src, vecs, vecOff(pos(j)), b.sizes(t))
+        src += b.sizes(t); t += 1; j += 1
+      }
+      blocks(bi) = null
     }
-    val vecs = new Array[Float](vecOff(n))
-    i = 0
-    while (i < n) {
-      sorted(i).getSeq[Float](1).copyToArray(vecs, vecOff(i)); i += 1
-    }
-    // `!deleted` keeps only rows whose flag is false: a null flag is not
-    // live at the final rank, the frame walk's filter
-    val deleted = sorted.map(r => r.isNullAt(2) || r.getBoolean(2))
-    val levels = sorted.map(r => if (r.isNullAt(3)) -1 else r.getInt(3))
     val entryLevel = if (n == 0) -1 else levels.max
     val entries =
       if (entryLevel < 0) Array.empty[Int]
@@ -208,30 +273,45 @@ object GraphSnapshot {
 
     // per-level CSR adjacency; an edge whose src or dst is not a node can
     // never fire in the frame walk (frontier ids are node ids, and the
-    // expansion joins the node table), so it is dropped here
-    val es = edges.select(col("level").cast("int"), col("src").cast("long"),
-        col("dst").cast("long"))
-      .collect()
-      .flatMap { r =>
-        if (r.anyNull) None
-        else {
-          val s = java.util.Arrays.binarySearch(ids, r.getLong(1))
-          val d = java.util.Arrays.binarySearch(ids, r.getLong(2))
-          if (s < 0 || d < 0 || r.getInt(0) < 0) None
-          else Some((r.getInt(0), s, d))
+    // expansion joins the node table), so it is dropped where it is read
+    val idsB = nodes.sparkSession.sparkContext.broadcast(ids)
+    val triples = try edges.select(col("level").cast("int"),
+        col("src").cast("long"), col("dst").cast("long"))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val index = idsB.value
+        val out = new ArrayBuilder.ofInt // (level, src, dst) per edge
+        rows.foreach { r =>
+          if (!r.anyNull && r.getInt(0) >= 0) {
+            val s = java.util.Arrays.binarySearch(index, r.getLong(1))
+            val d = java.util.Arrays.binarySearch(index, r.getLong(2))
+            if (s >= 0 && d >= 0) { out += r.getInt(0); out += s; out += d }
+          }
         }
-      }
-    val nLevels = if (es.isEmpty) 0 else es.map(_._1).max + 1
+        Iterator.single(out.result())
+      }.collect()
+    finally idsB.destroy() // read only by the collect above
+    var nLevels = 0
+    triples.foreach { b =>
+      var t = 0
+      while (t < b.length) { nLevels = math.max(nLevels, b(t) + 1); t += 3 }
+    }
     val adjOff = Array.fill(nLevels)(new Array[Int](n + 1))
-    es.foreach { case (l, s, _) => adjOff(l)(s + 1) += 1 }
+    triples.foreach { b =>
+      var t = 0
+      while (t < b.length) { adjOff(b(t))(b(t + 1) + 1) += 1; t += 3 }
+    }
     adjOff.foreach { off =>
-      var j = 0
-      while (j < n) { off(j + 1) += off(j); j += 1 }
+      var k = 0
+      while (k < n) { off(k + 1) += off(k); k += 1 }
     }
     val adj = adjOff.map(off => new Array[Int](off(n)))
     val fill = adjOff.map(_.clone())
-    es.foreach { case (l, s, d) =>
-      adj(l)(fill(l)(s)) = d; fill(l)(s) += 1
+    triples.foreach { b =>
+      var t = 0
+      while (t < b.length) {
+        val l = b(t); val s = b(t + 1)
+        adj(l)(fill(l)(s)) = b(t + 2); fill(l)(s) += 1; t += 3
+      }
     }
     Some(new GraphData(ids, vecOff, vecs, deleted, entryLevel, entries,
       adjOff, adj))

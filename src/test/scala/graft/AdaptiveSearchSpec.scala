@@ -165,6 +165,32 @@ class AdaptiveSearchSpec extends SparkSpec {
     assert(parts.nonEmpty && parts.forall(_ == 1), parts)
   }
 
+  test("a corpus past the snapshot gate sends the seeded arm to the frame " +
+      "walk without measuring the graph") {
+    val emb = Tables.embeddings(spark, sf001)
+    val nodesDf = VectorQueries.asVectorTable(emb)
+    val queriesDf = VectorQueries.querySet(emb)
+    val p = IndexParams(m = 12, bucketBits = 4, nBands = 4)
+    val (gn, ge) = IndexBuild.build(nodesDf, p)
+    val graph = Some((gn.localCheckpoint(), ge.localCheckpoint()))
+    def hopExchanges(statsHint: Option[(Long, Double)]) = {
+      val (arm, res) = AdaptiveSearch.search(nodesDf, queriesDf, k = 5,
+        minSim = 0.2, p, exactCutoff = 0L, skewCutoff = 1.1,
+        pqCutoff = Long.MaxValue, prebuiltGraph = graph,
+        statsHint = statsHint)
+      assert(arm === AdaptiveSearch.UseGraphSeeded)
+      res.queryExecution.optimizedPlan.collect {
+        case r: org.apache.spark.sql.catalyst.plans.logical
+            .RepartitionByExpression => r
+      }.size
+    }
+    // the fixture's graph fits: fused walk, no hop exchange
+    assert(hopExchanges(None) === 0)
+    // a reported corpus of 10 M vectors is past the gate by its count
+    // alone, so the walk runs as joins without counting the graph
+    assert(hopExchanges(Some((10000000L, 0.0))) > 0)
+  }
+
   test("PQ arm accepts a prebuilt residual index and matches the in-line " +
       "build") {
     val emb = Tables.embeddings(spark, sf001)

@@ -84,6 +84,40 @@ class GraphDeltaSpec extends SparkSpec {
     a.delete(); b.delete()
   }
 
+  test("a searchAuto result built before a streamed batch still reads " +
+      "after the batch and a later search") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val s = freshStore("stale-read")
+    s.addBatch(baseRows.toDF("id", "vector"))
+    s.rebuild()
+    val queries = Seq(3L, 17L, 29L).map(i => (i, vec(i)))
+      .toDF("query_id", "query_vec")
+    def auto() = {
+      val (arm, res) = s.searchAuto(queries, 5, strengthSetting = 0,
+        exactCutoff = 10, skewCutoff = 1.1)
+      assert(arm === graft.operators.AdaptiveSearch.UseGraphSeeded)
+      res
+    }
+    def rows(df: DataFrame) = df.select("query_id", "rn", "id", "score")
+      .as[(Long, Int, Long, Double)].collect().toSeq.sorted
+    val old = auto()
+    val expected = rows(old)
+    assert(expected.nonEmpty)
+    val stream = MemoryStream[(Long, Seq[Float], String, Long)]
+    val q = s.startIngest(stream.toDF().toDF("id", "vector", "op", "seq"))
+    try {
+      stream.addData(d1.map { case (i, v, _) => (i, v, "upsert", i) })
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(s.indexPointer === "0 1")
+    // the new generation's first search replaces the memoized overlay
+    // and walk snapshot; the old result keeps reading its own
+    assert(rows(auto()).nonEmpty)
+    assert(rows(old) === expected)
+    s.delete()
+  }
+
   test("membership chain ≡ fresh recompute over the served nodes — the " +
       "persisted memb table + O(|Δ|) delta rows replace the per-batch " +
       "corpus-wide projection exactly (upsert, move, delete)") {

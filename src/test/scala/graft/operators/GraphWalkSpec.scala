@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.functions.VectorFunctions
@@ -112,7 +113,6 @@ class GraphWalkSpec extends graft.SparkSpec {
       val (fr, wr) = both(None, routed, Some(f.seeds), None, -2.0)
       assert(fr.exists(_._1 == 3L))
       assert(fr === wr)
-      snap.foreach(_.destroy())
     }
   }
 
@@ -145,12 +145,16 @@ class GraphWalkSpec extends graft.SparkSpec {
     val f = fixture(13L, "cosine")
     val n = f.nodes.count(); val e = f.edges.count()
     val bytes = GraphSnapshot.bytesFor(n, Dim, e)
-    assert(bytes === n * (4 * Dim + 9) + 4 * e)
+    // per node an 8-byte id, a 4-byte offset, a tombstone byte and 6
+    // floats as a 40-byte UnsafeArrayData; per edge one int
+    assert(bytes === n * 53 + 4 * e)
+    for (d <- Seq(1, 6, 64, 65, 384))
+      assert(GraphSnapshot.vectorBytes(d) === UnsafeArrayData
+        .fromPrimitiveArray(new Array[Float](d)).getSizeInBytes)
     assert(GraphSnapshot.fitting(f.nodes, f.edges, Dim, bytes - 1).isEmpty)
     val s = GraphSnapshot.fitting(f.nodes, f.edges, Dim, bytes)
     assert(s.map(_.bytes) === Some(bytes))
     assert(s.map(_.nodes) === Some(n.toInt))
     assert(s.map(_.entryLevel) === Some(2))
-    s.foreach(_.destroy())
   }
 }
