@@ -23,27 +23,15 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 object Tables {
   private val tsColumns = Set("l_shipdate", "o_orderdate", "ts")
 
-  /** Loaded-relation memo, keyed by (session, dir, table): resolving a
-    * parquet relation costs a driver-side footer/schema job per call,
-    * and the harness loads the same ten immutable fixture tables
-    * hundreds of times per run (178 queries × 2 bench passes) — r15
-    * measured the resolve tax on every single row. The memoized
-    * DataFrame carries the resolved schema AND the relation's file
-    * index, so repeat loads are pure plan reuse. Keyed by session so a
-    * restarted test session never sees another session's plans;
-    * fixture dirs are immutable for a process lifetime by the driver
-    * contract. */
-  private val loaded = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // evict entries of stopped sessions (r16, advisor item): a
-    // long-lived multi-session host must not strongly reference dead
-    // sessions' resolved file indexes/plans for the process lifetime
-    loaded.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) loaded.remove(k)
-    }
-    loaded.getOrElseUpdate((spark, dir, name), {
+  /** `dir/name.parquet` with timestamps normalized, memoized per
+    * (session, dir, table) through [[graft.util.Artifacts]]: resolving a
+    * parquet relation costs a driver-side footer/schema job per call, and
+    * the harness loads the same ten fixture tables hundreds of times per
+    * run (178 queries × 2 bench passes). The memoized DataFrame carries
+    * the resolved schema and the relation's file index, so repeat loads
+    * are pure plan reuse. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.util.Artifacts(spark, dir, s"table/$name") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema.fields.foldLeft(raw) { (df, f) =>
@@ -53,8 +41,7 @@ object Tables {
           df.withColumn(f.name, col(f.name).cast(TimestampType))
         else df
       }
-    })
-  }
+    }
 
   def lineitem(s: SparkSession, d: String): DataFrame = load(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = load(s, d, "orders")

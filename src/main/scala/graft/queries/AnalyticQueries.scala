@@ -20,26 +20,15 @@ import graft.operators.{AsOfJoin, BloomPrune, RangeJoin}
   */
 object AnalyticQueries {
 
-  /** q30's bucketed fact tables, written once per process per (session,
-    * data dir) — the AnnQueries.indexFor build-once rule: repartition on
-    * the bucket key first → exactly ONE file per bucket (task i holds
+  /** q30's bucketed fact tables, written once: repartition on the
+    * bucket key first → exactly ONE file per bucket (task i holds
     * precisely bucket i's rows — HashPartitioning and the bucket spec
     * share the same murmur3 pmod), each file internally sorted for
-    * min/max pruning. Table names carry a per-dir suffix so sf dirs
-    * never collide in the shared session catalog.
-    *
-    * r16 fixes (advisor medium + verdict hygiene item): the memo keys by
-    * SESSION too — catalog table names are session state, so a
-    * SparkSession restart in the same process must re-register rather
-    * than serve names the new catalog doesn't hold (the Tables.load
-    * rule) — and the backing parquet lives under a
-    * `Fs.tempDirDeletedOnExit` scratch dir like every other memo instead
-    * of a fixed tmp path that outlived the JVM. */
-  private val bucketedTables = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (String, String)]
+    * min/max pruning. Table names carry a per-dir and per-session suffix
+    * so sf dirs and sessions never collide in the shared catalog. */
   private def bucketedTablesFor(s: SparkSession, d: String)
       : (String, String) =
-    bucketedTables.getOrElseUpdate((s, d), {
+    graft.util.Artifacts(s, d, "analytic/bucketed-tables") {
       val sfx = (d.hashCode.toLong & 0xffffffffL).toHexString +
         "_" + (System.identityHashCode(s).toLong & 0xffffffffL).toHexString
       val base = graft.util.Fs.tempDirDeletedOnExit("graft-bucketed")
@@ -57,7 +46,7 @@ object AnalyticQueries {
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(lt)
       (ot, lt)
-    })
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Backward as-of join: each click attributed to the user's most recent
@@ -281,7 +270,7 @@ object AnalyticQueries {
       // bucketed tables are a WRITE-ONCE layout investment (that is the
       // operator's whole point at 100 TB — pay the shuffle at write
       // time, join shuffle-free forever after), so the tables persist
-      // once per process per data dir and every invocation runs only
+      // once per session and data dir and every invocation runs only
       // the co-located join ([[bucketedTablesFor]]; pre-r15 every call
       // re-dropped and re-wrote both tables, timing the build alongside
       // the serve)

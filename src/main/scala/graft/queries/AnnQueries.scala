@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Artifacts
 import graft.functions.VectorFunctions
 import graft.operators.{AnnSearch, GraphSnapshot, IndexBuild, IndexParams,
   KnnSearch}
@@ -51,79 +52,35 @@ object AnnQueries {
     (floor(score * lit(1000000.0) + lit(0.5)).cast("double") /
       lit(1000000.0)).as("score_r")
 
-  /** Build-once-per-process index per data dir, persisted to a temp path and
-    * reloaded — searches run against the saved index (the real usage
-    * pattern: build is a batch job, search consumes its parquet output). */
-  private val builtPaths = scala.collection.concurrent.TrieMap.empty[String, String]
+  /** The index built once and persisted — searches run against the
+    * saved index (the real usage pattern: build is a batch job, search
+    * consumes its parquet output). */
   private def indexFor(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val path = builtPaths.getOrElseUpdate(d, {
+    val path = Artifacts(s, d, "ann/index") {
       val p = graft.util.Fs.tempDirDeletedOnExit("graft-ann-index")
       val emb = Tables.embeddings(s, d)
       val (nodes, edges) = IndexBuild.build(VectorQueries.asVectorTable(emb), params)
       IndexBuild.save(nodes, edges, params, p)
       p
-    })
+    }
     val (n, e, _) = IndexBuild.load(s, path)
     (n, e)
-  }
-
-  /** Exact-top-k audit-tower memo (the [[indexFor]] pattern applied to
-    * the GROUND-TRUTH side of recall audits): a03/a27 run an approximate
-    * search AND a full exact kNN per audit — two search towers by
-    * design — but the exact tower is a pure function of (data dir,
-    * query set, k) and only Q × k rows, so it materializes once per
-    * process and every later pass (the bench harness times two) reads
-    * the checkpoint. */
-  private val exactTowerMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  // session-keyed (r16, the Tables.load rule): a localCheckpoint's
-  // blocks belong to ONE session — a restarted session must rebuild,
-  // not serve another session's dead checkpoint
-  private def exactTower(s: SparkSession, key: String)
-      (build: => DataFrame): DataFrame =
-    exactTowerMemo.getOrElseUpdate((s, key), build.localCheckpoint())
-
-  /** Shared BUILD-ARTIFACT store, one parquet per (data dir, artifact):
-    * the [[indexFor]] rule applied to the compressed-index families. A
-    * coarse codebook, an assignment table, PQ/SQ/BQ codes or quantization
-    * bounds are INDEX BUILD outputs — in production they are written once
-    * per generation and every serve reads the persisted parquet (exactly
-    * what [[graft.VectorStore.buildPqIndex]] does) — yet before r15 every
-    * a1x/a2x/a3x row re-derived them inline per invocation, so the bench
-    * paid the same corpus-scan build ~20× per pass (and [[ChunkedServe]]
-    * rows re-paid it once per chunk through the lazy plan). Values are
-    * unchanged: parquet round-trips FLOAT/INT/BIGINT bit-exactly (the
-    * [[indexFor]]/[[anchoredMergedEdgesFor]] precedent), and every oracle
-    * re-derives the same artifacts from the same fixture parquet. */
-  private val artifactPaths =
-    scala.collection.concurrent.TrieMap.empty[(String, String), String]
-  private def artifact(s: SparkSession, d: String, name: String)
-      (build: => DataFrame): DataFrame = {
-    val path = artifactPaths.getOrElseUpdate((d, name), {
-      val p = graft.util.Fs.tempDirDeletedOnExit(s"graft-art-$name")
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
   }
 
   private def nodesOf(s: SparkSession, d: String): DataFrame =
     VectorQueries.asVectorTable(Tables.embeddings(s, d))
 
   /** The saved index's level-0 ≤2-HOP adjacency (src, dst within graph
-    * distance ≤ 2, self-loops dropped), persisted once per process per
-    * data dir — a build artifact exactly like the adjacency it derives
-    * from (an HNSW-family build can emit it alongside the edge table for
-    * one extra self-join). Serving reads it so a level-0 walk covers two
-    * hops per join round: half the sequential rounds for the same reach
-    * (the r15 verdict's "fewer/fatter hops"). Out-degree stays bounded
-    * (≤ M + M²) so the per-round candidate arithmetic keeps the
-    * bounded-frontier broadcast gates sound. */
-  private val edges2Paths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def edges2For(s: SparkSession, d: String): DataFrame = {
-    val path = edges2Paths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-edges2-l0")
+    * distance ≤ 2, self-loops dropped) — a build artifact exactly like
+    * the adjacency it derives from (an HNSW-family build can emit it
+    * alongside the edge table for one extra self-join). Serving reads it
+    * so a level-0 walk covers two hops per join round: half the
+    * sequential rounds for the same reach (the r15 verdict's
+    * "fewer/fatter hops"). Out-degree stays bounded (≤ M + M²) so the
+    * per-round candidate arithmetic keeps the bounded-frontier broadcast
+    * gates sound. */
+  private def edges2For(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "ann/edges2-l0") {
       val (_, edges) = indexFor(s, d)
       val e0 = edges.filter(col("level") === 0)
         .select(col("src"), col("dst"))
@@ -134,17 +91,24 @@ object AnnQueries {
         .filter(col("src") =!= col("dst"))
         .dropDuplicates("src", "dst")
       two.select(lit(0).as("level"), col("src"), col("dst"))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** a04/a05/a1x/a2x/a3x's shared k=10 sample coarse codebook.
     *
+    * A coarse codebook, an assignment table, PQ/SQ/BQ codes or
+    * quantization bounds are INDEX BUILD outputs — in production they are
+    * written once per generation and every serve reads the persisted
+    * parquet (exactly what [[graft.VectorStore.buildPqIndex]] does) — yet
+    * before r15 every a1x/a2x/a3x row re-derived them inline per
+    * invocation, so the bench paid the same corpus-scan build ~20× per
+    * pass (and [[ChunkedServe]] rows re-paid it once per chunk through
+    * the lazy plan). Values are unchanged by persisting: parquet
+    * round-trips FLOAT/INT/BIGINT bit-exactly, and every oracle
+    * re-derives the same artifacts from the same fixture parquet.
+    *
     * The CODEBOOK-CLASS artifacts (this, [[pqCb]], [[resCb]],
     * [[sqBounds]]) deliberately stay lazy derivations instead of
-    * [[artifact]] parquet: they are kilobyte-sized and cheap to derive,
+    * persisted parquet: they are kilobyte-sized and cheap to derive,
     * and materializing them INFLATES the downstream broadcast-gate
     * estimates — Catalyst's non-CBO join estimate is the PRODUCT of the
     * child sizes, so replacing a limit-k subplan (estimated at a few
@@ -162,7 +126,7 @@ object AnnQueries {
 
   /** The (id, cell) assignment table against [[coarse10]]. */
   private def asg10(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "asg10")(
+    Artifacts.parquet(s, d, "ann/asg10")(
       graft.operators.IvfIndex.assign(nodesOf(s, d), coarse10(s, d))
         .select(col("id"), col("cell")))
 
@@ -174,7 +138,7 @@ object AnnQueries {
 
   /** Raw-space PQ codes against [[pqCb]]. */
   private def pqCodes(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "pqcodes")(
+    Artifacts.parquet(s, d, "ann/pqcodes")(
       graft.operators.PqIndex.encode(nodesOf(s, d), pqCb(s, d),
         m = 8, subLen = 8))
 
@@ -189,7 +153,7 @@ object AnnQueries {
 
   /** Residual-space PQ codes against [[resCb]]. */
   private def resCodes(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "rescodes")(
+    Artifacts.parquet(s, d, "ann/rescodes")(
       graft.operators.PqIndex.encode(
         graft.operators.PqIndex.residuals(nodesOf(s, d), asg10(s, d),
             coarse10(s, d))
@@ -202,19 +166,19 @@ object AnnQueries {
     * before r15 every ADC serve (and every a37 CHUNK) re-paid it through
     * [[graft.operators.PqIndex]]'s packedOf fallback. */
   private def pqCodesPacked(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "pqcodes-packed")(
+    Artifacts.parquet(s, d, "ann/pqcodes-packed")(
       graft.operators.PqIndex.packCodes(pqCodes(s, d)))
 
   /** [[resCodes]] packed (id, codes). */
   private def resCodesPacked(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "rescodes-packed")(
+    Artifacts.parquet(s, d, "ann/rescodes-packed")(
       graft.operators.PqIndex.packCodes(resCodes(s, d)))
 
   /** [[resCodes]] packed WITH the stored norm (id, codes, nrm) — the
     * cosine-consistent IP arm's serving layout
     * ([[graft.operators.PqIndex.packCodesWithNorms]]). */
   private def resCodesPackedNrm(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "rescodes-packed-nrm")(
+    Artifacts.parquet(s, d, "ann/rescodes-packed-nrm")(
       graft.operators.PqIndex.packCodesWithNorms(resCodes(s, d),
         nodesOf(s, d)))
 
@@ -225,63 +189,51 @@ object AnnQueries {
 
   /** SQ8 codes (id, codes) against [[sqBounds]]. */
   private def sqCodes(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "sqcodes")(
+    Artifacts.parquet(s, d, "ann/sqcodes")(
       graft.operators.SqIndex.encode(nodesOf(s, d), sqBounds(s, d)))
 
   /** Packed sign bits (id, bits) against [[sqBounds]]. */
   private def bqBits(s: SparkSession, d: String): DataFrame =
-    artifact(s, d, "bqbits")(
+    Artifacts.parquet(s, d, "ann/bqbits")(
       graft.operators.BqIndex.encode(nodesOf(s, d), sqBounds(s, d)))
 
-  /** Dispatch-stats memos (the `VectorStore.memoStats` rule applied to
-    * the operator-level rows): corpus counts, filtered-set counts and
-    * the sampled bucket histogram feeding [[graft.operators
-    * .AdaptiveSearch]] decisions are pure functions of the fixture dir —
-    * measured once per process; every dispatch passes them through the
-    * operator's own `statsHint`/`idFilterCount`/`queryCount` parameters
-    * (exactly how the production facade serves repeat query batches)
-    * instead of re-running the decision jobs per call. */
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-  private def memoCount(d: String, key: String)(f: => Long): Long =
-    countMemo.getOrElseUpdate((d, key), f)
-  private val statsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Double)]
+  /** The size of [[VectorQueries.querySet]], counted once. */
+  private def queryCount(s: SparkSession, d: String): Long =
+    Artifacts(s, d, "ann/count/queries")(
+      VectorQueries.querySet(Tables.embeddings(s, d)).count())
+
+  /** Dispatch stats (the `VectorStore.memoStats` rule applied to the
+    * operator-level rows): corpus counts, filtered-set counts and the
+    * sampled bucket histogram feeding [[graft.operators.AdaptiveSearch]]
+    * decisions are pure functions of the fixture dir, measured once;
+    * every dispatch passes them through the operator's own
+    * `statsHint`/`idFilterCount`/`queryCount` parameters (exactly how
+    * the production facade serves repeat query batches) instead of
+    * re-running the decision jobs per call. */
   private def memoStats(s: SparkSession, d: String, p: IndexParams)
       : (Long, Double) =
-    statsMemo.getOrElseUpdate(s"$d|${p.bucketBits}|${p.nBands}",
+    Artifacts(s, d, s"ann/stats/${p.bucketBits}/${p.nBands}")(
       graft.operators.AdaptiveSearch.stats(nodesOf(s, d), p))
 
-  /** a06's merged edge table, derived once per process per data dir (the
-    * pair-table memo shape applied to index MAINTENANCE): a merge is an
-    * ingest operation — run once per delta batch, persisted, and every
-    * consumer (stats reporting, serving) reloads its output, exactly as
-    * [[graft.VectorStore.mergeIndex]] persists generations. */
-  private val mergedPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def mergedEdgesFor(s: SparkSession, d: String): DataFrame = {
-    val path = mergedPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-merged-index")
+  /** a06's merged edge table, persisted like a build artifact: a merge
+    * is an ingest operation — run once per delta batch, persisted, and
+    * every consumer (stats reporting, serving) reloads its output,
+    * exactly as [[graft.VectorStore.mergeIndex]] persists generations. */
+  private def mergedEdgesFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "ann/merged-index") {
       val (nodes, edges) = indexFor(s, d)
       val delta = VectorQueries.asVectorTable(Tables.embeddings(s, d))
         .filter(col("id") % 40 === 1)
         .withColumn("vector", transform(col("vector"), x => -x))
       IndexBuild.merge(nodes, edges, delta, params)._2
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** a13's anchored merged edges — the [[mergedEdgesFor]] memo over the
+  /** a13's anchored merged edges — [[mergedEdgesFor]] over the
     * efConstruction=32 anchored base. Parquet round-trips doubles
     * exactly, so the reloaded scores quantize identically. */
-  private val anchoredMergedPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def anchoredMergedEdgesFor(s: SparkSession, d: String)
-      : DataFrame = {
-    val path = anchoredMergedPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-anch-merged")
+      : DataFrame =
+    Artifacts.parquet(s, d, "ann/anchored-merged") {
       val emb = Tables.embeddings(s, d)
       val anchors = anchorPlanes(emb, nBands = 4, bits = 3)
       val mp = params.copy(efConstruction = 32)
@@ -290,52 +242,33 @@ object AnnQueries {
       val delta = nodesDf.filter(col("id") % 40 === 1)
         .withColumn("vector", transform(col("vector"), x => -x))
       IndexBuild.mergeAnchored(nodes, edges, delta, mp, anchors)._2
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** a23's store fixture, built once per process per data dir (the
-    * memo shape of [[indexFor]] applied to a FACADE lifecycle): base =
-    * every id not divisible by 10; one append delta upserting the
-    * id % 10 == 0 rows and tombstoning the id % 10 == 5 rows.
-    * `compactEvery = 100` keeps the delta chain live so the query reads
-    * the OVERLAY path, not a folded base. Re-opening by path is the
-    * production read pattern (state is the persisted snapshot chain). */
-  private val facadeStorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  /** a31/a33's retained-generation store, one lifecycle per data dir:
-    * v0 = full load, v1 = negating upsert of id % 5 == 0, v2 = tombstone
-    * pass over id % 7 == 3; opened with `retainBases = 2` so every
-    * generation stays readable. */
-  private val asofStorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** a31/a33's retained-generation store: v0 = full load, v1 = negating
+    * upsert of id % 5 == 0, v2 = tombstone pass over id % 7 == 3; opened
+    * with `retainBases = 2` so every generation stays readable. */
   private def asofStore(s: SparkSession, d: String): graft.VectorStore = {
     VectorFunctions.register(s)
     import s.implicits._
-    val path = asofStorePaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-asof-facade")
+    VectorQueries.openStore(s, d, "ann/asof-store", retainBases = 2) { store =>
       val nodesDf = VectorQueries.asVectorTable(Tables.embeddings(s, d))
-      val store = graft.VectorStore.openOrCreate(s, p,
-        IndexParams(dim = 64), retainBases = 2)
       store.addBatch(nodesDf.select(col("id"), col("vector")))
       store.addBatch(nodesDf.filter(col("id") % 5 === 0)
         .select(col("id"),
           transform(col("vector"), x => -x).as("vector")))
       store.removeMultiple(nodesDf.filter(col("id") % 7 === 3)
         .select(col("id")).as[Long].collect().toSeq)
-      p
-    })
-    graft.VectorStore.openOrCreate(s, path, IndexParams(dim = 64),
-      retainBases = 2)
+    }
   }
+
+  /** a23's store fixture: base = every id not divisible by 10; one
+    * append delta upserting the id % 10 == 0 rows and tombstoning the
+    * id % 10 == 5 rows. `compactEvery = 100` keeps the delta chain live
+    * so the query reads the OVERLAY path, not a folded base. */
   private def facadeAppendStore(s: SparkSession, d: String)
-      : graft.VectorStore = {
-    val path = facadeStorePaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-pq-facade")
+      : graft.VectorStore =
+    VectorQueries.openStore(s, d, "ann/pq-facade-store") { store =>
       val nodesDf = VectorQueries.asVectorTable(Tables.embeddings(s, d))
-      val store = graft.VectorStore.openOrCreate(s, p, IndexParams(dim = 64))
       store.addBatch(nodesDf.filter(col("id") % 10 =!= 0)
         .select(col("id"), col("vector")))
       store.buildPqIndex(cells = 10, codebookMode = "sample", ksub = 16)
@@ -344,58 +277,45 @@ object AnnQueries {
         .unionByName(nodesDf.filter(col("id") % 10 === 5)
           .withColumn("deleted", lit(true)))
       store.appendPqIndex(delta, compactEvery = 100)
-      p
-    })
-    graft.VectorStore.openOrCreate(s, path, IndexParams(dim = 64))
-  }
+    }
 
-  /** Memoized anchored build per data dir (the `indexFor` shape): a07
-    * and a18 both consume the identical deterministic
-    * `buildAnchored(nodes, params, anchors)` graph — build once per
-    * process, checkpoint, share. a13's base build memoizes SEPARATELY
+  /** The anchored build a07 and a18 both consume (the identical
+    * deterministic `buildAnchored(nodes, params, anchors)` graph),
+    * checkpointed once and shared. a13's base is a separate entry
     * ([[anchoredFor32]]): its `efConstruction = 32` must also govern the
-    * base it merges into, so the two bases differ structurally and can
-    * never share a memo entry. */
-  private val anchoredBuilt = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+    * base it merges into, so the two bases differ structurally. */
   private def anchoredFor(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    anchoredBuilt.getOrElseUpdate((s, d), {
+    Artifacts(s, d, "ann/anchored") {
       val emb = Tables.embeddings(s, d)
       val (n, e) = IndexBuild.buildAnchored(
         VectorQueries.asVectorTable(emb), params,
         anchorPlanes(emb, nBands = 4, bits = 3))
       (n.localCheckpoint(), e.localCheckpoint())
-    })
+    }
 
-  /** The graph rows' walk snapshot per (session, graph) — the
-    * [[anchoredFor]] memo rule applied to the broadcast their fused walk
-    * reads ([[graft.operators.GraphSnapshot]]): counted, gated and
-    * collected once per process, not once per pass. Session-keyed: a
-    * broadcast belongs to one SparkContext. */
-  private val snapshotMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Option[GraphSnapshot]]
-  private def snapshotFor(s: SparkSession, key: String, nodes: DataFrame,
-      edges: DataFrame): GraphSnapshot.Known =
-    GraphSnapshot.Held(snapshotMemo.getOrElseUpdate((s, key),
+  /** The walk snapshot of a graph row's graph
+    * ([[graft.operators.GraphSnapshot]]): counted, gated and collected
+    * once, not once per pass. */
+  private def snapshotFor(s: SparkSession, d: String, name: String,
+      nodes: DataFrame, edges: DataFrame): GraphSnapshot.Known =
+    GraphSnapshot.Held(Artifacts(s, d, s"ann/snapshot/$name")(
       GraphSnapshot.fitting(nodes, edges, params.dim,
         AnnSearch.DefaultBroadcastBytes)))
 
-  /** The efConstruction=32 anchored base a13 merges into — same
-    * memoize-once-per-dir shape as [[anchoredFor]]. Merge's contract is
-    * an already-persisted index (it scans nodes/edges more than once),
-    * so the checkpoint here is load-bearing, not just a bench saving. */
-  private val anchoredBuilt32 = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
+  /** The efConstruction=32 anchored base a13 merges into. Merge's
+    * contract is an already-persisted index (it scans nodes/edges more
+    * than once), so the checkpoint here is load-bearing, not just a
+    * bench saving. */
   private def anchoredFor32(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
-    anchoredBuilt32.getOrElseUpdate((s, d), {
+    Artifacts(s, d, "ann/anchored32") {
       val emb = Tables.embeddings(s, d)
       val (n, e) = IndexBuild.buildAnchored(
         VectorQueries.asVectorTable(emb), params.copy(efConstruction = 32),
         anchorPlanes(emb, nBands = 4, bits = 3))
       (n.localCheckpoint(), e.localCheckpoint())
-    })
+    }
 
   /** Anchor hyperplanes for a01: the `nBands × bits` lowest-vec_id
     * embeddings, banded by vec_id VALUE (`vec_id / bits` — exactly the
@@ -535,7 +455,7 @@ object AnnQueries {
     }),
 
     // Index build structural summary: edge counts + node counts per level
-    // (build runs once per process; see indexFor).
+    // (built once; see indexFor).
     "a02_index_build_stats" -> ((s, d) => {
       VectorFunctions.register(s)
       val (_, edges) = indexFor(s, d)
@@ -670,8 +590,8 @@ object AnnQueries {
         .select(col("vec_id").as("query_id"),
           scale(col("embedding"), col("vec_id")).as("query_vec"))
       val filt = nodes.filter(col("id") % 4 === 1).select(col("id"))
-      val f = memoCount(d, "mod4_1")(filt.count())
-      val tot = memoCount(d, "n")(nodes.count())
+      val f = Artifacts(s, d, "ann/count/mod4_1")(filt.count())
+      val tot = Artifacts(s, d, "ann/count/n")(nodes.count())
       // the facade/dispatcher rule verbatim: base 3, euclidean cap =
       // the filtered members themselves, probe-all at 10× budget
       val pb = AnnSearch.escalatedProbes(3, f, tot, math.max(1L, f))
@@ -791,7 +711,7 @@ object AnnQueries {
       // ChunkedServeSpec's job; THIS row pins the equality contract
       // without growing the chunk count — and the job count — with sf)
       val qset = VectorQueries.querySet(emb)
-      val q = memoCount(d, "queries")(qset.count())
+      val q = queryCount(s, d)
       val rows = math.max(1L, (q + 3) / 4)
       graft.operators.ChunkedServe.serveChunked(
         qset, "query_id", rows, queryCount = q) { chunk =>
@@ -895,8 +815,7 @@ object AnnQueries {
       val short2 = short.join(broadcast(cursors.select(col("query_id"))),
         Seq("query_id"), "left_semi")
       graft.operators.KnnSearch.pageAfter(short2, cursors, k = 10,
-          cursorRowsHint = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()))
+          cursorRowsHint = queryCount(s, d))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -914,7 +833,7 @@ object AnnQueries {
       VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val qset = VectorQueries.querySet(emb)
-      val q = memoCount(d, "queries")(qset.count())
+      val q = queryCount(s, d)
       // exactChunkRows = gate / (dim*4 + 64); dim 64 → 320 B/query
       val gate = math.max(1L, (q + 3) / 4) * 320L
       val (strat, res) = graft.operators.AdaptiveSearch.search(
@@ -1074,9 +993,8 @@ object AnnQueries {
       AnnSearch.searchGraphSeeded(nodes, edges,
           VectorQueries.querySet(emb), k = 10, minSim = -2.0, params,
           ef = 48, iters = 2, anchors = Some(anchors),
-          queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()),
-          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
+          queryCount = queryCount(s, d),
+          snapshot = snapshotFor(s, d, "anchored", nodes, edges))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -1095,9 +1013,8 @@ object AnnQueries {
       AnnSearch.searchGraphSeededIvf(nodes, edges,
           VectorQueries.querySet(emb), k = 10, minSim = -2.0, params,
           centroids, ef = 48, iters = 2, nProbe = 3,
-          queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()),
-          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
+          queryCount = queryCount(s, d),
+          snapshot = snapshotFor(s, d, "anchored", nodes, edges))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -1135,10 +1052,13 @@ object AnnQueries {
         k = 10, minSim = -2.0,
         params.copy(m = params.m * (params.m + 1)),
         ef = 96, itersPerLevel = 2, efUpper = 16,
-        queryCount = memoCount(d, "queries")(queriesDf.count()),
-        snapshot = snapshotFor(s, s"$d|walk2", nodes, walkEdges))
+        queryCount = queryCount(s, d),
+        snapshot = snapshotFor(s, d, "walk2", nodes, walkEdges))
         .select(col("query_id"), col("id"))
-      val exact = exactTower(s, s"$d|k10|all")(
+      // the exact tower is a pure function of (dir, query set, k) with
+      // Q × k rows: checkpointed once, so every later pass (the bench
+      // harness times two) pays only the approximate tower under test
+      val exact = Artifacts.checkpoint(s, d, "ann/exact-tower/k10-all")(
           KnnSearch.knnExact(nodesDf, queriesDf, 10, minSim = -2.0))
         .select(col("query_id").as("eq"), col("id").as("eid"))
       // approx is Q×k rows — broadcast it so the audit join never plans
@@ -1194,23 +1114,25 @@ object AnnQueries {
     }),
 
     // Filtered DISPATCH — a09's cost-based selection with a predicate:
-    // exactCutoff = 200 sits BETWEEN the corpus (500) and the filtered
-    // set (167), so deciding on the corpus size would pick the LSH arm
-    // while deciding on the FILTERED size picks exact-over-the-subset —
-    // the oracle pins the strategy literal AND the filtered-exact rows,
-    // so a corpus-size decision or a post-filtering arm each fail the
-    // hash.
+    // exactCutoff is the midpoint of the filtered set (a third of the
+    // corpus) and the corpus, so at every fixture scale deciding on the
+    // corpus size would pick an approximate arm while deciding on the
+    // FILTERED size picks exact-over-the-subset — the oracle pins the
+    // strategy literal AND the filtered-exact rows, so a corpus-size
+    // decision or a post-filtering arm each fail the hash.
     "a24_filtered_dispatch" -> ((s, d) => {
       VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val nodesDf = VectorQueries.asVectorTable(emb)
+      val filtered = Artifacts(s, d, "ann/count/mod3")(
+        nodesDf.filter(col("id") % 3 === 0).count())
+      val total = Artifacts(s, d, "ann/count/n")(nodesDf.count())
       val (strategy, res) = graft.operators.AdaptiveSearch.search(
         nodesDf, VectorQueries.querySet(emb), k = 10, minSim = 0.5, params,
-        exactCutoff = 200,
+        exactCutoff = (filtered + total) / 2,
         idFilter = Some(nodesDf.filter(col("id") % 3 === 0)
           .select(col("id"))),
-        idFilterCount = Some(memoCount(d, "mod3")(
-          nodesDf.filter(col("id") % 3 === 0).count())),
+        idFilterCount = Some(filtered),
         statsHint = Some(memoStats(s, d, params)))
       res.select(col("query_id"), col("id"), col("rn"))
         .withColumn("strategy", lit(strategy.toString))
@@ -1293,17 +1215,16 @@ object AnnQueries {
       val centroids = coarse10(s, d)
       val filt = nodesDf.filter(col("id") % 3 === 0).select(col("id"))
       val np = AnnSearch.escalatedProbes(nProbe = 4,
-        filtered = memoCount(d, "mod3")(filt.count()),
-        total = memoCount(d, "n")(nodesDf.count()), cells = 10)
+        filtered = Artifacts(s, d, "ann/count/mod3")(filt.count()),
+        total = Artifacts(s, d, "ann/count/n")(nodesDf.count()), cells = 10)
       val approx = AnnSearch.searchGraphSeededIvf(nodes, edges,
           VectorQueries.querySet(emb), k = 10, minSim = -2.0, params,
           centroids, ef = 48, iters = 2, nProbe = np,
           idFilter = Some(filt),
-          queryCount = memoCount(d, "queries")(
-            VectorQueries.querySet(emb).count()),
-          snapshot = snapshotFor(s, s"$d|anchored", nodes, edges))
+          queryCount = queryCount(s, d),
+          snapshot = snapshotFor(s, d, "anchored", nodes, edges))
         .select(col("query_id"), col("id"))
-      val exact = exactTower(s, s"$d|k10|mod3")(
+      val exact = Artifacts.checkpoint(s, d, "ann/exact-tower/k10-mod3")(
           KnnSearch.knnExact(nodesDf.filter(col("id") % 3 === 0),
             VectorQueries.querySet(emb), 10, minSim = -2.0))
         .select(col("query_id").as("eq"), col("id").as("eid"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Artifacts
 import graft.functions.VectorFunctions
 import graft.operators.TextDedup
 
@@ -20,88 +21,41 @@ object TextQueries {
     Tables.documents(s, d).filter(col("doc_id") % 100 === 0)
       .select(col("doc_id").as("query_id"), col("text"))
 
-  /** Dispatch-stats memo (the AnnQueries.memoCount shape): pure
-    * fixture-dir counts feeding arithmetic broadcast gates. */
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-  private def memoCount(d: String, key: String)(f: => Long): Long =
-    countMemo.getOrElseUpdate((d, key), f)
-
-  /** MinHash-LSH near-dup pairs built once per process per data dir,
-    * persisted to parquet and reloaded — the production pattern (pair
+  /** MinHash-LSH near-dup pairs — the production pattern (pair
     * generation is one batch job; components d08 and keep/drop selection
-    * d11 consume its output) and the [[graft.queries.AnnQueries]]
-    * `indexFor` memo shape. d03/d08/d11 share ONE derivation instead of
-    * re-running the tokenize→band→verify pipeline three times.
-    *
-    * Memo contract: keyed on the data DIR PATH under the harness's
-    * immutable-fixture assumption (a testdata dir never changes within a
-    * process — true for the driver and Bench; a caller mutating a dir
-    * in-process must not reuse this memo). The temp parquet dirs are
-    * deleted on JVM exit. Bench comparability: whichever of d03/d08/d11
-    * runs FIRST pays the full pipeline; the other two time a parquet
-    * read of its output. */
-  private val pairPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def nearDupPairsFor(s: SparkSession, d: String): DataFrame = {
-    val path = pairPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-neardup-pairs")
+    * d11 consume its output). d03/d08/d11 share ONE derivation instead
+    * of re-running the tokenize→band→verify pipeline three times. Bench
+    * comparability: whichever of d03/d08/d11 runs FIRST pays the full
+    * pipeline; the other two time a parquet read of its output. */
+  private def nearDupPairsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/neardup-pairs")(
       TextDedup.minhashNearDupPairs(Tables.documents(s, d),
-          nHashes = 6, minJaccard = 0.95)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        nHashes = 6, minJaccard = 0.95))
 
-  /** The component labels over [[nearDupPairsFor]]'s pair table, derived
-    * once per process per data dir (the same memo shape): d08 reports
-    * them, d11's keep/drop selection consumes them — the iterative
-    * min-label propagation runs ONCE instead of per consumer. */
-  private val labelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def nearDupLabelsFor(s: SparkSession, d: String): DataFrame = {
-    val path = labelPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-neardup-labels")
-      TextDedup.connectedComponents(nearDupPairsFor(s, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  /** The component labels over [[nearDupPairsFor]]'s pair table: d08
+    * reports them, d11's keep/drop selection consumes them — the
+    * iterative min-label propagation runs ONCE instead of per consumer. */
+  private def nearDupLabelsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/neardup-labels")(
+      TextDedup.connectedComponents(nearDupPairsFor(s, d)))
 
-  /** d04's blocked word-trigram Jaccard pair table, derived once per
-    * process per data dir (the [[nearDupPairsFor]] memo shape and
-    * contract — pair generation is one batch job whose parquet output
-    * consumers reload; the r15 verdict's item 4 names this row as the
-    * most expensive untouched text query and this memo shape as the
-    * fix). Values unchanged: the parquet round-trips (a_id, b_id,
-    * jacc-rounded) exactly and the d04 oracle re-derives every pair
-    * from the raw table. */
-  private val ngramPairPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def ngramPairsFor(s: SparkSession, d: String): DataFrame = {
-    val path = ngramPairPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-ngram-pairs")
+  /** d04's blocked word-trigram Jaccard pair table (the r15 verdict's
+    * item 4 names this row as the most expensive untouched text query).
+    * Values unchanged: the parquet round-trips (a_id, b_id,
+    * jacc-rounded) exactly and the d04 oracle re-derives every pair from
+    * the raw table. */
+  private def ngramPairsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/ngram-pairs")(
       TextDedup.ngramJaccardPairs(Tables.documents(s, d),
-          n = 3, minJaccard = 0.02, blockCol = "source")
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        n = 3, minJaccard = 0.02, blockCol = "source"))
 
-  /** d13's packed sign-bit codes over the twin-injected fixture, derived
-    * once per process per data dir (the AnnQueries bqBits artifact shape):
-    * bounds training + bit packing are index-BUILD outputs; only the
+  /** d13's packed sign-bit codes over the twin-injected fixture: bounds
+    * training + bit packing are index-BUILD outputs; only the
     * Hamming-ball pair join runs per call. Words are exact BIGINTs —
     * parquet round-trips them; the d13 oracle re-derives bounds, bits and
     * every pair from the raw table. */
-  private val d13BitsPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def d13BitsFor(s: SparkSession, d: String): DataFrame = {
-    val path = d13BitsPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-d13-bits")
+  private def d13BitsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/d13-bits") {
       val base = Tables.embeddings(s, d).select(col("vec_id").as("id"),
         col("embedding").as("vector"))
       val twins = base.filter(col("id") % 25 === 0)
@@ -111,41 +65,25 @@ object TextQueries {
       val nodes = base.unionByName(twins)
       val bounds = graft.operators.SqIndex.trainBounds(nodes)
       graft.operators.BqIndex.encode(nodes, bounds)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   /** t26's DSIR per-bucket log-likelihood-ratio model (≤ 512 BIGINT
-    * rows), derived once per process per data dir — the nbModelFor rule
-    * applied to the importance-resampling model (train once per corpus
-    * snapshot, score batches against the persisted table — the paper's
-    * own serving shape). Parquet-exact; the t26 oracle re-derives the
-    * model from the raw table. */
-  private val dsirLlrPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def dsirLlrFor(s: SparkSession, d: String): DataFrame = {
-    val path = dsirLlrPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-dsir-llr")
+    * rows) — train once per corpus snapshot, score batches against the
+    * persisted table (the paper's own serving shape). Parquet-exact; the
+    * t26 oracle re-derives the model from the raw table. */
+  private def dsirLlrFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/dsir-llr") {
       val docs = Tables.documents(s, d)
       graft.operators.ImportanceResampling.bucketLlr(
-          docs, docs.filter(col("lang") === "en"), buckets = 512)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        docs, docs.filter(col("lang") === "en"), buckets = 512)
+    }
 
-  /** d06's LSH-blocked candidate pair table, derived once per process
-    * per data dir (the d13 bits rule — bucket assignments and the banded
-    * candidate join are index-BUILD outputs; pair ids are exact BIGINTs,
-    * parquet round-trips them). The cosine verify stays per call. */
-  private val d06CandPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def d06CandidatesFor(s: SparkSession, d: String): DataFrame = {
-    val path = d06CandPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-d06-cand")
+  /** d06's LSH-blocked candidate pair table — bucket assignments and the
+    * banded candidate join are index-BUILD outputs; pair ids are exact
+    * BIGINTs, parquet round-trips them. The cosine verify stays per
+    * call. */
+  private def d06CandidatesFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/d06-cand") {
       val e = Tables.embeddings(s, d)
       val nodes = e.select(col("vec_id").as("id"),
         col("embedding").as("v"))
@@ -157,118 +95,82 @@ object TextQueries {
         .join(keyed.select(col("b"), col("id").as("b_id")), Seq("b"))
         .filter(col("a_id") < col("b_id"))
         .select(col("a_id"), col("b_id")).distinct()
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
-  /** t34's filtered-subset BM25 posting table, derived once per process
-    * per data dir (the servingPostings build/serve split applied to the
-    * operator row): with pre-filter semantics every stat recomputes on
-    * the subset, so the postings are a pure function of (dir, filter) —
-    * a per-source posting generation. `c` is integer micros (BIGINT) —
-    * parquet-exact; the t34 oracle re-derives the filtered stats. */
-  private val t34PostingsPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def t34PostingsFor(s: SparkSession, d: String): DataFrame = {
-    val path = t34PostingsPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-t34-postings")
+  /** t34's filtered-subset BM25 posting table (the servingPostings
+    * build/serve split applied to the operator row): with pre-filter
+    * semantics every stat recomputes on the subset, so the postings are
+    * a pure function of (dir, filter) — a per-source posting generation.
+    * `c` is integer micros (BIGINT) — parquet-exact; the t34 oracle
+    * re-derives the filtered stats. */
+  private def t34PostingsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/t34-postings")(
       graft.operators.Retrieval.bm25Postings(
-          Tables.documents(s, d).filter(col("doc_id") % 3 === 0))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        Tables.documents(s, d).filter(col("doc_id") % 3 === 0)))
 
-  /** t36's trained Naive-Bayes model, derived once per process per data
-    * dir (the artifact memo shape): a trained classifier is THE
+  /** t36's trained Naive-Bayes model: a trained classifier is THE
     * canonical build output — fastText/CCNet-style filters train once
-    * and score the whole corpus — yet t36 re-trained per call (4
-    * tokenize passes + a driver vocab count each time). Both model
-    * tables are integer-micro BIGINT columns, so parquet round-trips
-    * them exactly and the t36 oracle re-derives the same model from the
-    * raw table. */
-  private val nbModelPaths =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+    * and score the whole corpus. Both model tables are integer-micro
+    * BIGINT columns, so parquet round-trips them exactly and the t36
+    * oracle re-derives the same model from the raw table. One training
+    * feeds both tables. */
   private def nbModelFor(s: SparkSession, d: String)
       : graft.operators.TextClassifier.NbModel = {
-    val (wp, cp) = nbModelPaths.getOrElseUpdate(d, {
-      val w = graft.util.Fs.tempDirDeletedOnExit("graft-nb-weights")
-      val c = graft.util.Fs.tempDirDeletedOnExit("graft-nb-stats")
-      val m = graft.operators.TextClassifier.trainNaiveBayes(
-        Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
-        labelCol = "lang")
-      m.weights.write.mode("overwrite").parquet(w)
-      m.classStats.write.mode("overwrite").parquet(c)
-      (w, c)
-    })
+    lazy val m = graft.operators.TextClassifier.trainNaiveBayes(
+      Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0),
+      labelCol = "lang")
     graft.operators.TextClassifier.NbModel(
-      s.read.parquet(wp), s.read.parquet(cp))
+      Artifacts.parquet(s, d, "text/nb-weights")(m.weights),
+      Artifacts.parquet(s, d, "text/nb-stats")(m.classStats))
   }
 
-  /** d16's exact PPJoin pair table, derived once per process per data
-    * dir (the [[nearDupPairsFor]] memo shape — same contract: fixture
-    * dirs are immutable within a process). The derivation is the single
-    * most expensive harness query (~5.5 s at sf0.1 — an exact
-    * corpus-wide similarity self-join); the production pattern is
-    * identical to d03's: pair generation is one batch job whose parquet
-    * output every consumer (reporting, dedup-select, leakage audits)
-    * reloads. */
-  private val prefixPairPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def prefixJaccardPairsFor(s: SparkSession, d: String): DataFrame = {
-    val path = prefixPairPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-prefix-pairs")
+  /** d16's exact PPJoin pair table. The derivation is the single most
+    * expensive harness query (~5.5 s at sf0.1 — an exact corpus-wide
+    * similarity self-join); the production pattern is identical to
+    * d03's: pair generation is one batch job whose parquet output every
+    * consumer (reporting, dedup-select, leakage audits) reloads. */
+  private def prefixJaccardPairsFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/prefix-pairs")(
       TextDedup.prefixJaccardPairs(Tables.documents(s, d),
-          tauMicro = 500000L,
-          tokenFn = t => TextDedup.shingles(t, 3))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+        tauMicro = 500000L,
+        tokenFn = t => TextDedup.shingles(t, 3)))
 
-  /** One assembled [[graft.CorpusStore]] per process per data dir (the
-    * `indexFor`/`nearDupPairsFor` memo shape): load the documents table,
-    * run the composed assembly once against a temp store, and serve
-    * t21/t22 from the persisted generation — the real usage pattern
-    * (assemble is a batch job; training readers consume its parquet).
-    * Config exercises every default-off stage with the SAME constants as
-    * the standalone queries so the oracles compose their SQL: quality
-    * floor 0.62 (between t02's quantiles), cap 15 (t12), targets 3:1:2
-    * (t16), 80/10/10 split (t05), 256-token packing (t19). */
-  private val corpusStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.CorpusStore]
-  private val chunkStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.CorpusStore]
-  private def corpusStoreFor(s: SparkSession, d: String): graft.CorpusStore =
-    corpusStores.getOrElseUpdate(d, {
+  /** A [[graft.CorpusStore]] in a scratch dir, filled once. */
+  private def corpusStore(s: SparkSession, d: String, name: String,
+      retainGenerations: Int = 0)(fill: graft.CorpusStore => Unit)
+      : graft.CorpusStore =
+    Artifacts(s, d, s"text/$name") {
       val store = graft.CorpusStore.openOrCreate(s,
-        graft.util.Fs.tempDirDeletedOnExit("graft-corpus-store"))
+        graft.util.Fs.tempDirDeletedOnExit(s"graft-$name"),
+        retainGenerations = retainGenerations)
+      fill(store)
+      store
+    }
+
+  /** The assembled corpus t21/t22 serve from the persisted generation —
+    * the real usage pattern (assemble is a batch job; training readers
+    * consume its parquet). Config exercises every default-off stage with
+    * the SAME constants as the standalone queries so the oracles compose
+    * their SQL: quality floor 0.62 (between t02's quantiles), cap 15
+    * (t12), targets 3:1:2 (t16), 80/10/10 split (t05), 256-token packing
+    * (t19). */
+  private def corpusStoreFor(s: SparkSession, d: String): graft.CorpusStore =
+    corpusStore(s, d, "corpus-store") { store =>
       store.putDocuments(Tables.documents(s, d))
       store.assemble(graft.CorpusStore.AssemblyParams(
         minTokens = 5, minQuality = 0.62, maxPerSource = 15,
         targets = Map("src1" -> 3L, "src2" -> 1L, "src3" -> 2L),
         seqTokens = 256))
-      store
-    })
+    }
 
-  /** t35's VERSIONED corpus, one lifecycle per data dir (the
-    * [[corpusStoreFor]] memo shape on `retainGenerations`): v0 = the raw
-    * table, then a latest-wins delta appending " A" to doc_id % 5 == 0;
-    * v1 = a fresh put carrying " B" on doc_id % 3 == 0, then a delta
-    * appending " C" to doc_id % 7 == 2. One flip supersedes v0; the
-    * retention window keeps it readable WITH its delta. */
-  private val versionedStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.CorpusStore]
+  /** t35's VERSIONED corpus on `retainGenerations`: v0 = the raw table,
+    * then a latest-wins delta appending " A" to doc_id % 5 == 0; v1 = a
+    * fresh put carrying " B" on doc_id % 3 == 0, then a delta appending
+    * " C" to doc_id % 7 == 2. One flip supersedes v0; the retention
+    * window keeps it readable WITH its delta. */
   private def versionedStoreFor(s: SparkSession, d: String)
       : graft.CorpusStore =
-    versionedStores.getOrElseUpdate(d, {
-      val store = graft.CorpusStore.openOrCreate(s,
-        graft.util.Fs.tempDirDeletedOnExit("graft-versioned-store"),
-        retainGenerations = 1)
+    corpusStore(s, d, "versioned-store", retainGenerations = 1) { store =>
       val raw = Tables.documents(s, d)
       val cols = raw.columns.map(col).toIndexedSeq
       store.putDocuments(raw)
@@ -281,25 +183,19 @@ object TextQueries {
       store.appendDocuments(raw.filter(col("doc_id") % 7 === 2)
         .withColumn("text", concat(col("text"), lit(" C")))
         .select(cols: _*))
-      store
-    })
+    }
 
-  /** One exact-mode [[graft.CorpusStore]] per process per data dir (the
-    * [[corpusStoreFor]] shape) exercising assemble()'s COMPLIANCE-GRADE
-    * near-dup stage: `exactJaccardTauMicro` wires d16's PPJoin
-    * (lossless corpus-wide Jaccard self-join) into stage 4 in place of
-    * probabilistic MinHash. Every 20th doc re-enters with two appended
-    * sentinel tokens — trigram-set Jaccard (L−2)/L for an L-token doc,
-    * so clones of docs with ≥ 4 tokens sit AT/ABOVE τ = 0.5 and must
-    * drop, while very short docs' clones fall below and must survive:
-    * the threshold is exercised from both sides and the oracle
+  /** An exact-mode [[graft.CorpusStore]] exercising assemble()'s
+    * COMPLIANCE-GRADE near-dup stage: `exactJaccardTauMicro` wires d16's
+    * PPJoin (lossless corpus-wide Jaccard self-join) into stage 4 in
+    * place of probabilistic MinHash. Every 20th doc re-enters with two
+    * appended sentinel tokens — trigram-set Jaccard (L−2)/L for an
+    * L-token doc, so clones of docs with ≥ 4 tokens sit AT/ABOVE τ = 0.5
+    * and must drop, while very short docs' clones fall below and must
+    * survive: the threshold is exercised from both sides and the oracle
     * re-derives which side each pair lands on (the d10 rule). */
-  private val exactStores =
-    scala.collection.concurrent.TrieMap.empty[String, graft.CorpusStore]
   private def exactStoreFor(s: SparkSession, d: String): graft.CorpusStore =
-    exactStores.getOrElseUpdate(d, {
-      val store = graft.CorpusStore.openOrCreate(s,
-        graft.util.Fs.tempDirDeletedOnExit("graft-exact-store"))
+    corpusStore(s, d, "exact-store") { store =>
       val base = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val clones = base.filter(col("doc_id") % 20 === 0)
         .select((col("doc_id") + 300000L).as("doc_id"),
@@ -308,103 +204,56 @@ object TextQueries {
       store.assemble(graft.CorpusStore.AssemblyParams(
         clean = false, exactJaccardTauMicro = 500000L,
         exactJaccardShingle = 3))
-      store
-    })
+    }
 
-  /** Memoized per-dir BPE merge table (the `indexFor` build-once shape):
-    * t29 reports it, t30 replays it — one training pass per process. The
-    * returned frame is a driver-local literal (built from the collected
-    * merge list), so caching it holds no executor state. */
-  private val bpeMergesCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  /** The BPE merge table: t29 reports it, t30 replays it — one training
+    * pass. The returned frame is a driver-local literal (built from the
+    * collected merge list), so keeping it holds no executor state. */
   private def bpeMergesFor(s: SparkSession, d: String): DataFrame =
-    bpeMergesCache.getOrElseUpdate(d, graft.operators.TextFeaturizer
+    Artifacts(s, d, "text/bpe-merges")(graft.operators.TextFeaturizer
       .bpeTrain(Tables.documents(s, d), nMerges = 8))
 
-  /** Memoized per-dir BPE SEGMENTATION of the corpus (the tokenizer's
-    * serving output — tokenize once at build, consume many: t30 pins
-    * the per-doc piece stream, t33 packs sequences from the same piece
-    * counts; pre-r15 each row re-replayed all 8 merges over every word
-    * per call). Parquet round-trips the (id, wpos, pos, piece) rows
-    * exactly; the merges themselves stay memoized in [[bpeMergesFor]]. */
-  private val bpeSegPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def bpeSegmentedFor(s: SparkSession, d: String): DataFrame = {
-    val path = bpeSegPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-bpe-seg")
-      graft.operators.TextFeaturizer
-        .bpeSegment(Tables.documents(s, d), bpeMergesFor(s, d))
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
-  /** Retrieval audit-tower memo (the AnnQueries exactTower pattern):
-    * t09/t10 each stand up a full BM25 (and t10 an exact-cosine) run —
-    * pure functions of (data dir, config) with Q × topK-row results, so
-    * they materialize once per process and later passes (the bench
-    * harness times two) read the checkpoint. */
-  private val towerMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-  // session-keyed (r16, the Tables.load rule): a localCheckpoint's
-  // blocks belong to ONE session
-  private def memoTower(s: SparkSession, key: String)
-      (build: => DataFrame): DataFrame =
-    towerMemo.getOrElseUpdate((s, key), build.localCheckpoint())
+  /** The BPE SEGMENTATION of the corpus (the tokenizer's serving output
+    * — tokenize once at build, consume many: t30 pins the per-doc piece
+    * stream, t33 packs sequences from the same piece counts; pre-r15
+    * each row re-replayed all 8 merges over every word per call).
+    * Parquet round-trips the (id, wpos, pos, piece) rows exactly. */
+  private def bpeSegmentedFor(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/bpe-seg")(graft.operators.TextFeaturizer
+      .bpeSegment(Tables.documents(s, d), bpeMergesFor(s, d)))
 
   private def chunkStoreFor(s: SparkSession, d: String): graft.CorpusStore =
-    chunkStores.getOrElseUpdate(d, {
-      val store = graft.CorpusStore.openOrCreate(s,
-        graft.util.Fs.tempDirDeletedOnExit("graft-chunk-store"))
+    corpusStore(s, d, "chunk-store") { store =>
       store.putDocuments(Tables.documents(s, d)
         .select(col("doc_id"), col("text")))
       store.buildChunkIndex(window = 64, stride = 48, dim = 32)
-      store
-    })
+    }
 
-  /** Corpus feature-hash embeddings (dim 32), derived once per process
-    * per data dir (the [[nearDupPairsFor]] artifact shape applied to the
-    * e-family — r15 verdict item 5): batch embedding is an index-BUILD
-    * output (exactly what [[chunkStoreFor]]'s buildChunkIndex persists on
-    * the facade path), yet e07 re-embedded the whole corpus per call.
-    * featureHash is strictly per-doc (no corpus statistics), so a filter
-    * over the artifact equals embedding the filtered set, and parquet
-    * round-trips FLOAT exactly — every consumer's oracle re-derives the
-    * same values from the raw table. */
-  private val fhashPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def featureHash32For(s: SparkSession, d: String): DataFrame = {
-    val path = fhashPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-fhash32")
-      graft.operators.TextFeaturizer
-        .featureHash(Tables.documents(s, d), dim = 32)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+  /** Corpus feature-hash embeddings (dim 32) — the e-family's batch
+    * embedding is an index-BUILD output (exactly what [[chunkStoreFor]]'s
+    * buildChunkIndex persists on the facade path), yet e07 re-embedded
+    * the whole corpus per call (r15 verdict item 5). featureHash is
+    * strictly per-doc (no corpus statistics), so a filter over the
+    * artifact equals embedding the filtered set, and parquet round-trips
+    * FLOAT exactly — every consumer's oracle re-derives the same values
+    * from the raw table. */
+  private def featureHash32For(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/fhash32")(graft.operators.TextFeaturizer
+      .featureHash(Tables.documents(s, d), dim = 32))
 
   /** e04's chunk-tier embeddings (chunk explode + per-chunk feature
-    * hash, ids packed doc_id·1000 + chunk_id), derived once per process
-    * per data dir — the operator-content twin of [[chunkStoreFor]]'s
-    * persisted generation (e06 already serves from the facade's parquet;
-    * e04 re-derived the identical chunks + vectors per call). */
-  private val chunkVecPaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def chunkVec32For(s: SparkSession, d: String): DataFrame = {
-    val path = chunkVecPaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-chunkvec32")
+    * hash, ids packed doc_id·1000 + chunk_id) — the operator-content
+    * twin of [[chunkStoreFor]]'s persisted generation (e06 already
+    * serves from the facade's parquet; e04 re-derived the identical
+    * chunks + vectors per call). */
+  private def chunkVec32For(s: SparkSession, d: String): DataFrame =
+    Artifacts.parquet(s, d, "text/chunkvec32") {
       val chunks = graft.operators.CorpusOps
         .chunkByTokens(Tables.documents(s, d), window = 64, stride = 48)
         .select((col("doc_id") * 1000 + col("chunk_id")).as("doc_id"),
           col("chunk_text").as("text"))
       graft.operators.TextFeaturizer.featureHash(chunks, dim = 32)
-        .write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // The RAG chunk tier through its FACADE lifecycle (e04's chain,
@@ -455,7 +304,7 @@ object TextQueries {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("query_vec"))
       graft.operators.TextClassifier.knnClassify(labeled, queriesDf, k = 10,
-        queryCount = memoCount(d, "emb_mod5")(queriesDf.count()))
+        queryCount = Artifacts(s, d, "text/count/emb_mod5")(queriesDf.count()))
     }),
 
     // The CorpusStore facade end-to-end (docs side): clean → quality-gate
@@ -499,8 +348,11 @@ object TextQueries {
     // (no round(double) anywhere — see Retrieval's determinism contract),
     // so scores and ranks are engine-exact; the only residual hazard is
     // ln 1-ulp skew at a half-micro boundary, per distinct TERM.
+    // The top-k tower is a pure function of (dir, config) with Q × topK
+    // rows, so it is checkpointed once (t10/t37 share their towers the
+    // same way).
     "t09_bm25_search" -> ((s, d) =>
-      memoTower(s, s"$d|bm25|10")(
+      Artifacts.checkpoint(s, d, "text/tower/bm25-10")(
         graft.operators.Retrieval.bm25TopK(Tables.documents(s, d),
           retrievalQueryDocs(s, d), topK = 10))),
 
@@ -560,11 +412,11 @@ object TextQueries {
     // never enters the fusion stage.
     "t10_hybrid_rrf" -> ((s, d) => {
       VectorFunctions.register(s)
-      val lex = memoTower(s, s"$d|bm25|20")(
+      val lex = Artifacts.checkpoint(s, d, "text/tower/bm25-20")(
         graft.operators.Retrieval.bm25TopK(Tables.documents(s, d),
           retrievalQueryDocs(s, d), topK = 20))
       val emb = Tables.embeddings(s, d)
-      val vec = memoTower(s, s"$d|vec|20")(
+      val vec = Artifacts.checkpoint(s, d, "text/tower/vec-20")(
         graft.operators.KnnSearch.knnExact(
           VectorQueries.asVectorTable(emb),
           emb.filter(col("vec_id") % 100 === 0)
@@ -583,11 +435,11 @@ object TextQueries {
     // blend — a normalization or coalesce bug hash-mismatches.
     "t37_hybrid_weighted" -> ((s, d) => {
       VectorFunctions.register(s)
-      val lex = memoTower(s, s"$d|bm25|20")(
+      val lex = Artifacts.checkpoint(s, d, "text/tower/bm25-20")(
         graft.operators.Retrieval.bm25TopK(Tables.documents(s, d),
           retrievalQueryDocs(s, d), topK = 20))
       val emb = Tables.embeddings(s, d)
-      val vec = memoTower(s, s"$d|vec|20")(
+      val vec = Artifacts.checkpoint(s, d, "text/tower/vec-20")(
         graft.operators.KnnSearch.knnExact(
           VectorQueries.asVectorTable(emb),
           emb.filter(col("vec_id") % 100 === 0)
@@ -620,7 +472,7 @@ object TextQueries {
 
     // Full MinHash-LSH near-dup pipeline: identical-set collapse → AND-of-6
     // band bucketing over unique reps → exact Jaccard ≥ 0.95 verification.
-    // (Derived once per process via nearDupPairsFor; d08/d11 reuse it.)
+    // (Derived once via nearDupPairsFor; d08/d11 reuse it.)
     "d03_minhash_lsh_pairs" -> ((s, d) => nearDupPairsFor(s, d)),
 
     // EXACT corpus-wide Jaccard similarity self-join via PPJoin-style
@@ -669,9 +521,7 @@ object TextQueries {
     }),
 
     // Exact word-trigram Jaccard near-dups, blocked by source — served
-    // from the per-dir pair-table artifact ([[ngramPairsFor]], r16: the
-    // d03/d08/d11 memo shape applied to the last per-call pair
-    // derivation; the verdict's item 4).
+    // from the persisted pair-table artifact ([[ngramPairsFor]]).
     "d04_ngram_jaccard" -> ((s, d) => ngramPairsFor(s, d)),
 
     // SimHash-16 signatures + collision groups (identical-signature dedup).

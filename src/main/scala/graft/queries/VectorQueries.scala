@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.util.Artifacts
 import graft.functions.VectorFunctions
 import graft.operators.{KnnSearch, Mutations}
 
@@ -256,11 +257,9 @@ object VectorQueries {
       val anchors = AnnQueries.anchorPlanesPositional(tv, nBands = 4, bits = 3)
       val ann = graft.operators.Retrieval.maxSimRerank(tv, queryVecs,
         topK = 5, tokenHitsPerQvec = 8, anchors = anchors)
-      // the GROUND-TRUTH side of the audit — a pure function of the data
-      // dir with a Q×5-row result, so it materializes once per process
-      // (the AnnQueries exactTower / TextQueries memoTower rule); the ANN
+      // the GROUND-TRUTH side of the audit is checkpointed once; the ANN
       // tower under test above stays per-call
-      val exact = auditTower(s, s"$d|v15|maxsim5")(
+      val exact = Artifacts.checkpoint(s, d, "vec/audit-tower/v15-maxsim5")(
         graft.operators.Retrieval.maxSimTopK(tv, queryVecs, topK = 5))
       val subsetOk = ann.groupBy(col("query_id"))
         .agg((sum(when(col("doc_id") % 3 =!= 0, 1).otherwise(0)) === 0)
@@ -351,7 +350,7 @@ object VectorQueries {
       val qs2 = qs.join(broadcast(cursors.select(col("query_id"))),
         Seq("query_id"), "left_semi")
       KnnSearch.searchAfter(nodes, qs2, cursors, k = 10, minSim = -2.0,
-          cursorRowsHint = memoCount(d, "queries")(qs.count()))
+          cursorRowsHint = Artifacts(s, d, "vec/count/queries")(qs.count()))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -377,7 +376,7 @@ object VectorQueries {
       val qs2 = qs.join(broadcast(cursors.select(col("query_id"))),
         Seq("query_id"), "left_semi")
       KnnSearch.searchAfter(nodes, qs2, cursors, k = 10, minSim = 0.5,
-          cursorRowsHint = memoCount(d, "clqueries")(qs.count()))
+          cursorRowsHint = Artifacts(s, d, "vec/count/clqueries")(qs.count()))
         .select(col("query_id"), col("id"), col("rn"))
     }),
 
@@ -469,70 +468,43 @@ object VectorQueries {
     }),
   )
 
-  /** Memoized both-modality store for v24 (the facadeAppendStore
-    * shape — mutation-free, so one build serves every harness run):
-    * embeddings as vectors, the aligned documents registered via
-    * putDocuments. */
-  /** Fixture-count memo (the AnnQueries dispatch-stats rule): pure
-    * functions of the fixture dir, measured once per process and passed
-    * through size-hint parameters. */
-  private val countMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), Long]
-  private def memoCount(d: String, key: String)(f: => Long): Long =
-    countMemo.getOrElseUpdate((d, key), f)
+  /** A dim-64 [[graft.VectorStore]] filled once in a scratch dir, then
+    * re-opened by path on every call: the production read pattern (state
+    * is the persisted snapshot chain). */
+  private[queries] def openStore(s: SparkSession, d: String, name: String,
+      retainBases: Int = 0)(fill: graft.VectorStore => Unit)
+      : graft.VectorStore = {
+    val params = graft.operators.IndexParams(dim = 64)
+    val path = Artifacts(s, d, name) {
+      val p = graft.util.Fs.tempDirDeletedOnExit(
+        s"graft-${name.replace('/', '-')}")
+      fill(graft.VectorStore.openOrCreate(s, p, params, retainBases))
+      p
+    }
+    graft.VectorStore.openOrCreate(s, path, params, retainBases)
+  }
 
-  /** Exact-tower audit memo (the AnnQueries.exactTower pattern): the
-    * ground-truth side of an ANN-vs-exact audit row is a pure function
-    * of (data dir, config) with a Q × k-row result — materialize once
-    * per process, every later pass reads the checkpoint. */
-  private val auditTowerMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), org.apache.spark.sql.DataFrame]
-  // session-keyed (r16, the Tables.load rule): a localCheckpoint's
-  // blocks belong to ONE session
-  private def auditTower(s: SparkSession, key: String)
-      (build: => org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    auditTowerMemo.getOrElseUpdate((s, key), build.localCheckpoint())
-
-  private val hybridStorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def hybridStore(s: SparkSession, d: String): graft.VectorStore = {
-    val path = hybridStorePaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-hybrid-store")
-      val store = graft.VectorStore.openOrCreate(s, p,
-        graft.operators.IndexParams(dim = 64))
+  /** v24's mutation-free both-modality store: embeddings as vectors,
+    * the aligned documents registered via putDocuments. */
+  private def hybridStore(s: SparkSession, d: String): graft.VectorStore =
+    openStore(s, d, "vec/hybrid-store") { store =>
       store.addBatch(Tables.embeddings(s, d)
         .select(col("vec_id").as("id"), col("embedding").as("vector")))
       store.putDocuments(Tables.documents(s, d)
         .select(col("doc_id"), col("text")))
-      p
-    })
-    graft.VectorStore.openOrCreate(s, path,
-      graft.operators.IndexParams(dim = 64))
-  }
+    }
 
-  /** Memoized payload-carrying store for v22 (the facadeAppendStore
-    * shape): embeddings with their `label` column as addBatch payload,
-    * id % 13 tombstoned via the facade. */
-  private val facetStorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  /** v23's mutation lifecycle, one build per process per data dir (the
-    * [[facetStore]] shape applied to the removeWhere contract): ingest
-    * is a batch job — the predicate delete, its returned-count assert
-    * and the idempotence assert all run ONCE at build, and every later
-    * invocation re-opens the persisted store by path (the production
-    * read pattern). The r14 form re-built the store and re-ran both
-    * removeWhere mutations on every call — two snapshot writes per
-    * bench pass for an identical final state. */
-  private val removeWhereStorePaths =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  /** v23's mutation lifecycle, applied to the removeWhere contract:
+    * ingest is a batch job — the predicate delete, its returned-count
+    * assert and the idempotence assert all run ONCE at build, and every
+    * later invocation re-opens the persisted store by path (the
+    * production read pattern). The r14 form re-built the store and
+    * re-ran both removeWhere mutations on every call — two snapshot
+    * writes per bench pass for an identical final state. */
   private def removeWhereStore(s: SparkSession, d: String)
-      : graft.VectorStore = {
-    val path = removeWhereStorePaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-removewhere")
+      : graft.VectorStore =
+    openStore(s, d, "vec/removewhere-store") { store =>
       val emb = Tables.embeddings(s, d)
-      val store = graft.VectorStore.openOrCreate(s, p,
-        graft.operators.IndexParams(dim = 64))
       store.addBatch(emb.select(col("vec_id").as("id"),
         col("embedding").as("vector"), col("label")))
       val expected = emb.filter(col("label") < 3).count()
@@ -541,28 +513,19 @@ object VectorQueries {
         s"removeWhere tombstoned $n rows, fixture has $expected")
       require(store.removeWhere(col("label") < 3) == 0L,
         "removeWhere must be idempotent (already-deleted rows don't match)")
-      p
-    })
-    graft.VectorStore.openOrCreate(s, path,
-      graft.operators.IndexParams(dim = 64))
-  }
+    }
 
-  private def facetStore(s: SparkSession, d: String): graft.VectorStore = {
-    val path = facetStorePaths.getOrElseUpdate(d, {
-      val p = graft.util.Fs.tempDirDeletedOnExit("graft-facet-store")
+  /** v22/v25's payload-carrying store: embeddings with their `label`
+    * column as addBatch payload, id % 13 tombstoned via the facade. */
+  private def facetStore(s: SparkSession, d: String): graft.VectorStore =
+    openStore(s, d, "vec/facet-store") { store =>
       val emb = Tables.embeddings(s, d)
-      val store = graft.VectorStore.openOrCreate(s, p,
-        graft.operators.IndexParams(dim = 64))
       store.addBatch(emb.select(col("vec_id").as("id"),
         col("embedding").as("vector"), col("label")))
       val gone = emb.filter(col("vec_id") % 13 === 0)
         .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
       store.removeMultiple(gone)
-      p
-    })
-    graft.VectorStore.openOrCreate(s, path,
-      graft.operators.IndexParams(dim = 64))
-  }
+    }
 
   /** A CLUSTERED low-dim vector table derived DETERMINISTICALLY from
     * the embeddings fixture (both engines re-derive it bit-exactly, so

@@ -52,11 +52,16 @@ object Fs {
   /** Child entry NAMES of `path` (empty when the dir is missing) — one
     * listStatus round-trip, used by retention pruning / as-of version
     * discovery over the snapshot-chain layout. */
-  def list(spark: SparkSession, path: String): Seq[String] = {
+  def list(spark: SparkSession, path: String): Seq[String] =
+    listStatus(spark, path).map(_.getPath.getName)
+
+  /** Child entries of `path` with their size and mtime (empty when the
+    * dir is missing). */
+  def listStatus(spark: SparkSession, path: String)
+      : Seq[org.apache.hadoop.fs.FileStatus] = {
     val f = fs(spark, path)
     val p = new Path(path)
-    if (!f.exists(p)) Seq.empty
-    else f.listStatus(p).toSeq.map(_.getPath.getName)
+    if (!f.exists(p)) Seq.empty else f.listStatus(p).toSeq
   }
 
   /** Directory rename (atomic on HDFS/local). Hadoop signals failure by

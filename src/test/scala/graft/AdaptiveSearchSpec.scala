@@ -295,4 +295,14 @@ class AdaptiveSearchSpec extends SparkSpec {
       .select("query_id", "id").as[(Long, Long)].collect().toSet
     assert(got === want)
   }
+
+  test("a24 dispatches exact over the filtered set at sf0.1, where both sets pass a fixed cutoff of 200") {
+    // the sf0.1 fixture sits next to sf0.001; it is the one scale at
+    // which the filtered set (667) and the corpus (2000) both exceed 200
+    val sf01 = java.nio.file.Paths.get(sf001).resolveSibling("sf0.1").toString
+    val rows = graft.SparkEntry.queries("a24_filtered_dispatch")(
+      spark, sf01).select("strategy").as[String].collect()
+    assert(rows.nonEmpty)
+    assert(rows.toSet === Set(AdaptiveSearch.UseExact.toString))
+  }
 }

@@ -30,4 +30,15 @@ class SourceHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"raw control bytes found: ${offenders.mkString(", ")}")
   }
+
+  test("the query harness memoizes only through graft.util.Artifacts") {
+    val harness = scalaFiles(Paths.get("src/main/scala/graft/queries")) :+
+      Paths.get("src/main/scala/graft/Tables.scala")
+    val offenders = harness.filter { p =>
+      val src = new String(Files.readAllBytes(p), "UTF-8")
+      src.contains("TrieMap") || src.contains("getOrElseUpdate")
+    }
+    assert(offenders.isEmpty,
+      s"hand-rolled memo in: ${offenders.mkString(", ")}")
+  }
 }
